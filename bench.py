@@ -1,12 +1,11 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR (default
 /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS].
 
-Prints ONE JSON line of SCALARS on stdout (the per-query map lives in
-BENCH_DETAIL_c{cpus}.json, mirrored to BENCH_DETAIL.json for older
-consumers — VERDICT r12 #3: the full map outgrew the driver's stdout
-capture window; VERDICT r14 #2: the per-core suffix keeps a scaling
-re-run at a different $SPARK_GRAFT_CPUS from clobbering the main
-run's detail):
+Prints ONE JSON line of SCALARS on stdout.  The per-query map is too
+long for one stdout line and lives in BENCH_DETAIL_c{cpus}.json; the
+per-core suffix keeps a scaling re-run at a different $SPARK_GRAFT_CPUS
+from clobbering the main run's detail, and only a run at the main core
+count (32) mirrors it to BENCH_DETAIL.json for older consumers:
     {"metric": "...", "value": N, "unit": "sec", "n_queries": K,
      "detail": "BENCH_DETAIL.json", "sf": ...}
 
@@ -451,10 +450,13 @@ def main() -> int:
     # detail because both wrote the same BENCH_DETAIL.json, leaving
     # PERF scaling.per_query empty.  The detail now lands in
     # BENCH_DETAIL_c{cpus}.json (cpus also embedded in the record);
-    # BENCH_DETAIL.json is still written as a compatibility copy of the
-    # CURRENT run for consumers that read the fixed name.
+    # BENCH_DETAIL.json is still written as a compatibility copy for
+    # consumers that read the fixed name, but only by a run at the main
+    # core count — a scaling re-run must not clobber it either.
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     detail_name = f"BENCH_DETAIL_c{cpus}.json"
+    detail_files = [detail_name] + (["BENCH_DETAIL.json"]
+                                    if cpus == 32 else [])
     out = {
         "metric": f"headline_total_wall_min{iters}",
         "value": round(total, 4),
@@ -503,7 +505,7 @@ def main() -> int:
     }
     here = os.path.dirname(os.path.abspath(__file__))
     try:
-        for fname in (detail_name, "BENCH_DETAIL.json"):
+        for fname in detail_files:
             with open(os.path.join(here, fname), "w") as fh:
                 json.dump(detail, fh, indent=1)
         print("# detail " + json.dumps(detail), file=sys.stderr)

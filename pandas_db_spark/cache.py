@@ -14,6 +14,7 @@ here and byte-exact parity is not part of the behavioral contract).
 from __future__ import annotations
 
 import sys
+import threading
 from typing import Any, Hashable
 
 MB = 1024 * 1024
@@ -48,6 +49,9 @@ class Cache:
         self.max_dict_size = max_dict_size * MB
         self._data: dict[Hashable, Any] = {}
         self._size = 0
+        # put() runs from the populate_cache thread pool: the membership
+        # check, the size gate and both updates must be one step
+        self._lock = threading.Lock()
         self.is_ready = False
 
     def __contains__(self, key: Hashable) -> bool:
@@ -60,13 +64,15 @@ class Cache:
         return self._data.get(key, default)
 
     def put(self, key: Hashable, value: Any) -> None:
-        if not self.enabled or key in self._data:
+        if not self.enabled:
             return
         size = deep_sizeof(value)
-        if size > self.max_item_size or self._size + size > self.max_dict_size:
-            return
-        self._data[key] = value
-        self._size += size
+        with self._lock:
+            if (key in self._data or size > self.max_item_size
+                    or self._size + size > self.max_dict_size):
+                return
+            self._data[key] = value
+            self._size += size
 
     def memo(self, key: Hashable, compute):
         """Return cached value or compute-and-store."""
@@ -77,6 +83,7 @@ class Cache:
         return value
 
     def clear(self) -> None:
-        self._data.clear()
-        self._size = 0
+        with self._lock:
+            self._data.clear()
+            self._size = 0
         self.is_ready = False

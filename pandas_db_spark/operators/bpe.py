@@ -26,7 +26,7 @@ Scale shape — the trick that makes iterative BPE tractable on Spark:
   one row per round);
 * the merge rewrite is a narrow ``aggregate``-fold over each word's
   symbol array (again pure JVM), checkpointed every few rounds to stop
-  lineage growth — the same ``graph._truncate`` discipline (reliable
+  lineage growth through ``plans.checkpoint.truncate_lineage`` (reliable
   ``DataFrame.checkpoint`` when the session has a checkpoint dir, else
   ``localCheckpoint``) as the iterative connected components.
 
@@ -46,7 +46,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from pandas_db_spark.plans.checkpoint import truncate_lineage as _truncate
+from pandas_db_spark.plans.checkpoint import truncate_lineage
 
 _EOW = "</w>"   # end-of-word marker, standard in the public algorithm
 
@@ -177,7 +177,7 @@ def bpe_train(docs: DataFrame, text_col: str, n_merges: int,
             if rounds % checkpoint_every == 0:
                 # truncate lineage: chained array-folds would otherwise
                 # grow the plan linearly (graph.py discipline)
-                nxt = _truncate(nxt)
+                nxt = truncate_lineage(nxt)
             else:
                 nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
             seg.unpersist()
@@ -211,5 +211,5 @@ def bpe_segment(docs: DataFrame, text_col: str,
                              ELSE concat(acc, array(s)) END))""")
         seg = seg.select(id_col, F.expr(fold).alias("wsyms"))
         if (i + 1) % checkpoint_every == 0:
-            seg = _truncate(seg)
+            seg = truncate_lineage(seg)
     return seg.select(id_col, F.flatten("wsyms").alias("tokens"))

@@ -1245,10 +1245,9 @@ def minhash_incremental(new_docs: DataFrame, store_docs: DataFrame,
     eviction — long-running loops (one call per micro-batch) should either
     manage ``spark.catalog.clearCache()`` themselves or pass
     ``eager_cleanup=True``, which materializes the (tiny) survivor-id
-    frame via an eager truncation (``graph._truncate`` — reliable
-    ``checkpoint`` when a dir is set, else ``localCheckpoint``) and
-    unpersists the shingles
-    before returning."""
+    frame via an eager truncation (``plans.checkpoint.truncate_lineage``
+    — reliable ``checkpoint`` when a dir is set, else
+    ``localCheckpoint``) and unpersists the shingles before returning."""
     new_sh = _shared_shingles(new_docs, text_col, id_col, n, persist=True)
     new_sig = minhash_signatures(new_sh, id_col, num_perm,
                                  hash_bits=hash_bits)

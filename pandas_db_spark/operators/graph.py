@@ -27,10 +27,11 @@ needs 200k rounds — converges correctly (1 component) in ~45 s through
 the distributed rounds; the same topology at ≤ ``driver_threshold``
 edges answers in milliseconds via the union-find fast path.
 
-Lineage: each round's edge set is truncated through :func:`_truncate`,
-which picks the checkpoint flavor from the session — without truncation
-the plan doubles per iteration and the driver OOMs on plan serialization
-long before data is a problem.  When the session has a RELIABLE
+Lineage: each round's edge set is truncated through
+:func:`pandas_db_spark.plans.checkpoint.truncate_lineage`, which picks
+the checkpoint flavor from the session — without truncation the plan
+doubles per iteration and the driver OOMs on plan serialization long
+before data is a problem.  When the session has a RELIABLE
 checkpoint directory (``spark.sparkContext.setCheckpointDir`` on
 HDFS/S3A), every iterative operator in this module writes
 ``DataFrame.checkpoint`` files there, so an executor loss mid-iteration
@@ -54,72 +55,23 @@ from pandas_db_spark.session import tiny_df
 from pandas_db_spark.plans.checkpoint import truncate_lineage
 
 
-def _truncate(df: DataFrame) -> DataFrame:
-    """Truncate iteration lineage — used via ``.transform(_truncate)`` at
-    every per-round materialization site in this module (and by the other
-    iterative operators: BPE fitting, incremental dedup).
-
-    r15: the implementation moved to
-    :func:`pandas_db_spark.plans.checkpoint.truncate_lineage` (ADVICE
-    r14 — cross-module users should import THAT, not this private
-    name); this alias keeps the module's historical call sites intact.
-
-    Flavor is chosen from the session (VERDICT r12 #1 — the cluster path
-    must be REACHABLE, not just recommended in prose):
-
-    * ``spark.sparkContext.getCheckpointDir()`` set → reliable
-      ``DataFrame.checkpoint(eager=True)``: blocks persist on the
-      checkpoint filesystem (HDFS/S3A on a cluster), so losing an
-      executor mid-way through a 64-round k-core or 6-round PageRank
-      recomputes from the checkpoint instead of failing the job —
-      truncated lineage is otherwise unrecoverable.
-    * no checkpoint dir (local[32] has no DFS) →
-      ``localCheckpoint(eager=True)``: executor-local blocks, zero
-      filesystem dependency — the honest single-machine default, with
-      the documented fault-tolerance trade.
-
-    Both flavors are eager, so each iteration stays one job and the
-    results are bit-identical across flavors (asserted in
-    ``tests/test_graph.py``: reliable-vs-local hash parity).
-
-    Required companion conf on the reliable path (ADVICE r13):
-    ``spark.cleaner.referenceTracking.cleanCheckpoints=true`` — set by
-    :func:`pandas_db_spark.session.get_spark`; sessions built elsewhere
-    must carry it in spark-submit conf, or superseded per-round
-    checkpoints accumulate on the checkpoint filesystem for the
-    application's lifetime (the ContextCleaner only deletes checkpoint
-    files of GC'd RDDs when that flag is on; ``localCheckpoint`` blocks
-    are freed by the BlockManager regardless)."""
-    return truncate_lineage(df)
-
-
-def _signature(edges: DataFrame) -> tuple[int, int]:
-    """(row count, order-insensitive xxhash64 sum) of an edge set — one
-    job; used as the fixpoint test.  large/small-star is monotone (edge
-    sets converge to the star forest), so signature equality ⇒ fixpoint
-    for any practical purpose (a 64-bit sum collision that ALSO preserves
-    the count is ~2⁻⁶⁴ per round)."""
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        # decimal(38,0) sum: exact and overflow-free under ANSI mode
-        # (2^63 · 10^18 rows would be needed to saturate 38 digits).
-        F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
-                   F.lit(0)).cast("decimal(38,0)").alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
 def _truncate_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """``_truncate`` + :func:`_signature` in ONE job (r15, guide §1.2
-    "don't compute things twice"): the convergence signature rides the
-    checkpoint materialization as ``observe`` metrics — the same
-    fold-the-probe-into-the-write move as the r14 BM25 meta observe
-    (exact under task retries, SPARK-29345) — instead of paying a
-    second full pass over the edge set per CC round.  Both eager
+    """:func:`truncate_lineage` plus the edge set's convergence signature
+    ``(row count, order-insensitive xxhash64 sum)`` in ONE job: the
+    signature rides the checkpoint materialization as ``observe``
+    metrics — the same fold-the-probe-into-the-write move as the BM25
+    meta observe (exact under task retries, SPARK-29345) — instead of
+    paying a second full pass over the edge set per CC round.  Both eager
     checkpoint flavors run under ``withAction``, so the observation
     fires when the materialization job completes (verified on local
-    and reliable checkpoints; same decimal(38,0) arithmetic as
-    :func:`_signature`, value-identical by construction)."""
+    and reliable checkpoints; ``tests/test_graph.py`` checks the
+    observed values against a separate aggregate job).
+
+    large/small-star is monotone (edge sets converge to the star
+    forest), so signature equality ⇒ fixpoint for any practical purpose
+    (a 64-bit sum collision that ALSO preserves the count is ~2⁻⁶⁴ per
+    round).  The sum is decimal(38,0): exact and overflow-free under
+    ANSI mode."""
     from pyspark.sql import Observation
     obs = Observation()
     signed = edges.observe(
@@ -363,13 +315,13 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     is ~1e-9 · iterations — far below anything a ranking consumer sees.
 
     Scale shape: the edge set is deduplicated, hash-partitioned by
-    ``src`` and checkpointed ONCE (``_truncate``); each iteration is a single
-    job — join the (one-row-per-node) rank vector to the stationary edge
-    table, one map-side-combined ``groupBy(dst)``, and the dangling mass
-    folds in as a one-row broadcast (no driver collect inside the loop).
-    Per-iteration shuffle volume is O(nodes + edges-after-combine), never
-    O(edges · iterations) of lineage: each new rank vector is
-    eagerly checkpointed, truncating the plan exactly as
+    ``src`` and checkpointed ONCE (``truncate_lineage``); each iteration
+    is a single job — join the (one-row-per-node) rank vector to the
+    stationary edge table, one map-side-combined ``groupBy(dst)``, and
+    the dangling mass folds in as a one-row broadcast (no driver collect
+    inside the loop).  Per-iteration shuffle volume is O(nodes +
+    edges-after-combine), never O(edges · iterations) of lineage: each
+    new rank vector is eagerly checkpointed, truncating the plan exactly as
     ``connected_components`` does.  Dangling mass (outdeg-0 nodes) is
     redistributed uniformly — the standard stochastic-matrix completion —
     so rank mass is conserved up to floor leakage.
@@ -427,7 +379,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                       & (F.col("u") != F.col("v")))
     if weight_col is not None:
         e = (base.groupBy("u", "v").agg(F.sum("w").alias("w"))
-             .repartition("u").transform(_truncate))
+             .repartition("u").transform(truncate_lineage))
         wstats = e.agg(F.min("w").alias("lo"),
                        F.max("w").alias("hi")).collect()[0]
         w_min = wstats["lo"] if wstats["lo"] is not None else 1
@@ -439,11 +391,11 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     else:
         w_max = 1
         e = (base.distinct().repartition("u")
-             .transform(_truncate))
+             .transform(truncate_lineage))
         deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
     nodes = (e.select("u").union(e.select(F.col("v").alias("u")))
              .distinct().select(F.col("u").alias("id"))
-             .transform(_truncate))
+             .transform(truncate_lineage))
     n = nodes.count()
     if n == 0:
         return nodes.select("id", F.lit(0).cast("long").alias("rank_fp"))
@@ -477,7 +429,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     else:
         s_count = 0
         tele_col = F.lit(((1000 - damping_pm) * unit) // 1000)
-    ranks = ranks.transform(_truncate)
+    ranks = ranks.transform(truncate_lineage)
     has_dangling = deg.count() < n
     for i in range(iterations):
         # `div` is SQL integer division — never `/`, which promotes to
@@ -521,7 +473,7 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
         # materialization jobs while keeping the plan bounded; the LAST
         # round always checkpoints so callers get a truncated lineage.
         if i % 2 == 1 or i == iterations - 1:
-            ranks = ranks.transform(_truncate)
+            ranks = ranks.transform(truncate_lineage)
     return ranks.select("id", F.col("r").alias("rank_fp"))
 
 
@@ -575,10 +527,10 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a",
     sym = (e.union(e.select(F.col("b").alias("a"),
                             F.col("a").alias("b")))
            .repartition("a")
-           .transform(_truncate))
+           .transform(truncate_lineage))
     labels = (sym.select(F.col("a").alias("id")).distinct()
               .select("id", F.col("id").alias("label"))
-              .transform(_truncate))
+              .transform(truncate_lineage))
     for i in range(rounds):
         nbl = (sym.join(labels.select(F.col("id").alias("b"),
                                       F.col("label").alias("lab")), "b")
@@ -591,7 +543,7 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a",
                   .select(F.col("a").alias("id"),
                           (-F.col("m.nl")).alias("label")))
         if i % 2 == 1 or i == rounds - 1:
-            labels = labels.transform(_truncate)
+            labels = labels.transform(truncate_lineage)
     return labels
 
 
@@ -632,7 +584,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     beyond that, the bound scales as 1/unit²).
 
     Scale shape: identical to :func:`pagerank` — the deduplicated edge
-    set is hash-partitioned and checkpointed once (``_truncate``); each
+    set is hash-partitioned and checkpointed once (``truncate_lineage``); each
     iteration is two keyed joins against it with map-side-combined
     sums; the normalization maxima fold in as one-row broadcasts (no
     driver collect inside the loop); lineage truncates every other
@@ -654,10 +606,10 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
          .where(F.col("u").isNotNull() & F.col("v").isNotNull()
                 & (F.col("u") != F.col("v")))
          .distinct().repartition("u")
-         .transform(_truncate))
+         .transform(truncate_lineage))
     nodes = (e.select(F.col("u").alias("id"))
              .union(e.select(F.col("v").alias("id")))
-             .distinct().transform(_truncate))
+             .distinct().transform(truncate_lineage))
     n = nodes.count()
     if n == 0:
         return nodes.select("id",
@@ -669,7 +621,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
             f"pass unit <= {int((2 ** 62 // n) ** 0.5)} for this graph")
     state = nodes.select("id", F.lit(unit).cast("long").alias("h"),
                          F.lit(unit).cast("long").alias("a"))
-    state = state.transform(_truncate)
+    state = state.transform(truncate_lineage)
     for i in range(iterations):
         hv = state.select(F.col("id").alias("hu"), "h")
         # checkpoint the node-vector-sized raw sums (r14): the max
@@ -679,8 +631,8 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         # executed plan showed the whole subtree duplicated with no
         # exchange reuse); the checkpoint is ≤ n rows, and the max then
         # folds from materialized rows
-        a_raw = _truncate(e.join(hv, e["u"] == F.col("hu"))
-                          .groupBy("v").agg(F.sum("h").alias("ar")))
+        a_raw = truncate_lineage(e.join(hv, e["u"] == F.col("hu"))
+                                 .groupBy("v").agg(F.sum("h").alias("ar")))
         a_max = a_raw.agg(
             F.greatest(F.coalesce(F.max("ar"), F.lit(1)), F.lit(1))
             .alias("__am"))
@@ -691,8 +643,8 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                              F.expr("(ar * " + str(unit) + ") div __am"),
                              F.lit(0)).alias("a")))
         av = state.select(F.col("id").alias("auv"), F.col("a").alias("a2"))
-        h_raw = _truncate(e.join(av, e["v"] == F.col("auv"))
-                          .groupBy("u").agg(F.sum("a2").alias("hr")))
+        h_raw = truncate_lineage(e.join(av, e["v"] == F.col("auv"))
+                                 .groupBy("u").agg(F.sum("a2").alias("hr")))
         h_max = h_raw.agg(
             F.greatest(F.coalesce(F.max("hr"), F.lit(1)), F.lit(1))
             .alias("__hm"))
@@ -704,7 +656,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                              F.lit(0)).alias("h"),
                          "a"))
         if i % 2 == 1 or i == iterations - 1:
-            state = state.transform(_truncate)
+            state = state.transform(truncate_lineage)
     return state.select("id", F.col("h").alias("hub_fp"),
                         F.col("a").alias("auth_fp"))
 
@@ -729,13 +681,14 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
     "how far".
 
     Algorithm: frontier BFS.  The edge set is deduplicated,
-    hash-partitioned on ``src`` and checkpointed ONCE (``_truncate``); each
-    hop is one join of the CURRENT FRONTIER (never the visited set)
-    against the stationary edge table, an anti-join against the visited
-    set, and a distinct — per-hop shuffle volume is O(frontier-adjacent
-    edges), and the loop exits as soon as a frontier comes back empty,
-    so bounded-diameter graphs never pay for ``max_hops``.  Lineage is
-    truncated per hop exactly as :func:`connected_components` does.
+    hash-partitioned on ``src`` and checkpointed ONCE
+    (``truncate_lineage``); each hop is one join of the CURRENT FRONTIER
+    (never the visited set) against the stationary edge table, an
+    anti-join against the visited set, and a distinct — per-hop shuffle
+    volume is O(frontier-adjacent edges), and the loop exits as soon as
+    a frontier comes back empty, so bounded-diameter graphs never pay
+    for ``max_hops``.  Lineage is truncated per hop exactly as
+    :func:`connected_components` does.
 
     Unlike the alternating-star CC (round count O(log² n)), BFS rounds
     ARE the graph diameter — that is inherent to computing distances,
@@ -755,30 +708,30 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
          .where(F.col("u").isNotNull() & F.col("v").isNotNull()
                 & (F.col("u") != F.col("v")))
          .distinct().repartition("u")
-         .transform(_truncate))
+         .transform(truncate_lineage))
     nodes = (e.select("u").union(e.select(F.col("v").alias("u")))
              .distinct())
     sd = (seeds.select(F.col(seed_col).cast("long").alias("id"))
           .where(F.col("id").isNotNull()).distinct()
           .join(nodes.select(F.col("u").alias("id")), "id", "left_semi")
-          .transform(_truncate))
+          .transform(truncate_lineage))
     if sd.isEmpty():
         raise ValueError(
             "bfs_distances: no seed id appears in the graph — every "
             "distance would be undefined")
     visited = sd.select("id", F.lit(0).cast("long").alias("dist"))
-    visited = visited.transform(_truncate)
+    visited = visited.transform(truncate_lineage)
     frontier = visited.select("id")
     for hop in range(1, max_hops + 1):
         nxt = (e.join(frontier.withColumnRenamed("id", "u"), "u")
                .select(F.col("v").alias("id")).distinct()
                .join(visited, "id", "left_anti")
-               .transform(_truncate))
+               .transform(truncate_lineage))
         if nxt.isEmpty():
             break
         visited = (visited.union(
             nxt.select("id", F.lit(hop).cast("long").alias("dist")))
-            .transform(_truncate))
+            .transform(truncate_lineage))
         frontier = nxt
     return visited
 
@@ -822,7 +775,7 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
                 & F.col("w").isNotNull() & (F.col("u") != F.col("v")))
          .groupBy("u", "v").agg(F.min("w").alias("w"))
          .repartition("u")
-         .transform(_truncate))
+         .transform(truncate_lineage))
     wstats = e.agg(F.min("w").alias("lo"),
                    F.max("w").alias("hi")).collect()[0]
     w_min = wstats["lo"] if wstats["lo"] is not None else 0
@@ -839,13 +792,13 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
     sd = (seeds.select(F.col(seed_col).cast("long").alias("id"))
           .where(F.col("id").isNotNull()).distinct()
           .join(nodes.select(F.col("u").alias("id")), "id", "left_semi")
-          .transform(_truncate))
+          .transform(truncate_lineage))
     if sd.isEmpty():
         raise ValueError(
             "shortest_paths: no seed id appears in the graph — every "
             "cost would be undefined")
     dist = (sd.select("id", F.lit(0).cast("long").alias("cost"))
-            .transform(_truncate))
+            .transform(truncate_lineage))
     frontier = dist
     for _ in range(max_hops):
         cand = (e.join(frontier.select(F.col("id").alias("u"),
@@ -857,13 +810,13 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
                     .where(F.col("cost").isNull()
                            | (F.col("nc") < F.col("cost")))
                     .select("id", F.col("nc").alias("cost"))
-                    .transform(_truncate))
+                    .transform(truncate_lineage))
         if improved.isEmpty():
             break
         dist = (dist.join(improved.select(F.col("id").alias("iid")),
                           dist["id"] == F.col("iid"), "left_anti")
                 .union(improved)
-                .transform(_truncate))
+                .transform(truncate_lineage))
         frontier = improved
     return dist
 
@@ -909,7 +862,7 @@ def append_components(labels: DataFrame, new_pairs: DataFrame,
            .where(F.col("u").isNotNull() & F.col("v").isNotNull()
                   & (F.col("u") != F.col("v")))
            .distinct()
-           .transform(_truncate))
+           .transform(truncate_lineage))
     store = labels.select(F.col("id").alias("__sid"),
                           F.col("component").alias("__scomp"))
     touched = (np_.select("u").union(np_.select(F.col("v").alias("u")))
@@ -918,7 +871,7 @@ def append_components(labels: DataFrame, new_pairs: DataFrame,
     tl = (touched.join(store, touched["u"] == store["__sid"], "left")
           .select(F.col("u").alias("node"),
                   F.coalesce("__scomp", "u").alias("lab"))
-          .transform(_truncate))
+          .transform(truncate_lineage))
     la = tl.select(F.col("node").alias("u"), F.col("lab").alias("la"))
     lb = tl.select(F.col("node").alias("v"), F.col("lab").alias("lb"))
     quotient = (np_.join(la, "u").join(lb, "v")
@@ -982,11 +935,11 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                 & (F.col("a") != F.col("b")))
          .distinct()
-         .transform(_truncate))
+         .transform(truncate_lineage))
     deg = (e.select(F.col("a").alias("x"))
            .union(e.select(F.col("b").alias("x")))
            .groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-           .transform(_truncate))
+           .transform(truncate_lineage))
     da = deg.select(F.col("x").alias("a"), F.col("d").alias("da"))
     db = deg.select(F.col("x").alias("b"), F.col("d").alias("db"))
     # orient low-(deg, id) -> high-(deg, id); the HEAD's degree rides
@@ -1003,7 +956,7 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
                                      F.col("da").alias("dv")))
                  .alias("e"))
          .select("e.u", "e.v", "e.dv")
-         .transform(_truncate))
+         .transform(truncate_lineage))
     # canonical wedge order by the carried (deg, id) rank — each
     # unordered out-pair generated once, zero extra joins
     o1 = o.select("u", F.col("v").alias("w1"), F.col("dv").alias("d1"))
@@ -1065,8 +1018,8 @@ def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str,
         # dedup shuffle.  localCheckpoint blocks are freed when the plan
         # is garbage-collected; reliable-checkpoint FILES are only
         # cleaned when spark.cleaner.referenceTracking.cleanCheckpoints
-        # is on (set by session.get_spark — see _truncate's docstring).
-        inc = _truncate(inc)
+        # is on (set by session.get_spark — see truncate_lineage).
+        inc = truncate_lineage(inc)
         big = (inc.groupBy("g").agg(F.count(F.lit(1)).alias("__n"))
                .where(F.col("__n") > max_group_size))
         n_big = big.count()
@@ -1128,10 +1081,10 @@ def common_neighbor_counts(pairs: DataFrame, id_a: str = "id_a",
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                 & (F.col("a") != F.col("b")))
          .distinct()
-         .transform(_truncate))
+         .transform(truncate_lineage))
     sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
     deg = (sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-           .transform(_truncate))
+           .transform(truncate_lineage))
     adj = sym
     if max_center_degree is not None:
         n_dropped = deg.where(F.col("d") > max_center_degree).count()
@@ -1211,11 +1164,11 @@ def core_numbers(pairs: DataFrame, id_a: str = "id_a",
          .distinct())
     sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
            .repartition("a")
-           .transform(_truncate))
+           .transform(truncate_lineage))
     vals = (sym.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
             .select(F.col("a").alias("id"), F.col("c").cast("long")
                     .alias("c"))
-            .transform(_truncate))
+            .transform(truncate_lineage))
     # Σ degree = 2m, exact in int64 for any m < 2^62 (the overflow
     # headroom of the coreness sums below is even wider: c ≤ degree)
     prev_sum = vals.agg(
@@ -1229,7 +1182,7 @@ def core_numbers(pairs: DataFrame, id_a: str = "id_a",
                  .select(F.col("a").alias("id"),
                          F.expr("cast(size(filter(vs, (x, i) -> "
                                 "x >= i + 1)) as long)").alias("c"))
-                 .transform(_truncate))
+                 .transform(truncate_lineage))
         # sum equality ⟺ pointwise fixpoint (monotone non-increasing
         # sequence) — one scalar aggregate over checkpointed rows, no
         # old-vs-new join and no second value column in the state
@@ -1274,11 +1227,11 @@ def degree_moments(pairs: DataFrame, id_a: str = "id_a",
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()
                 & (F.col("a") != F.col("b")))
          .distinct()
-         .transform(_truncate))
+         .transform(truncate_lineage))
     deg = (e.select(F.col("a").alias("x"))
            .union(e.select(F.col("b").alias("x")))
            .groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-           .transform(_truncate))
+           .transform(truncate_lineage))
     stats = deg.agg(F.count(F.lit(1)).alias("n"),
                     F.max("d").alias("mx")).collect()[0]
     n_nodes = int(stats["n"] or 0)
@@ -1318,7 +1271,7 @@ def clustering_coefficients(pairs: DataFrame, id_a: str = "id_a",
     report ``n_tri = 0``.  The pair set is checkpointed ONCE so the
     degree and triangle branches don't each re-run the (possibly
     expensive) candidate-generation subtree."""
-    pairs = pairs.transform(_truncate)
+    pairs = pairs.transform(truncate_lineage)
     e = (pairs.select(F.least(id_a, id_b).alias("a"),
                       F.greatest(id_a, id_b).alias("b"))
          .where(F.col("a").isNotNull() & F.col("b").isNotNull()

@@ -33,6 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pandas_db_spark.session import tiny_df
+from pandas_db_spark.streaming.sink import write_batch
 
 from pandas_db_spark.functions.text import tokens
 
@@ -303,13 +304,12 @@ def append_bm25_stream_batch(batch_df: DataFrame, batch_id: int,
       equal a from-scratch batch build bit-for-bit (the r12
       ``sum_dl`` discipline — NULL texts count 0 tokens, in n_docs).
 
-    Both writes use dynamic partition overwrite keyed on ``batch_id``:
-    a crash REPLAY of a micro-batch rewrites its own partitions instead
-    of double-appending (every store sink in ``run_dedup_ingest``
-    honors the same contract).  Each doc id must arrive in exactly one
-    batch — the Structured Streaming checkpoint guarantees it; losing
-    the checkpoint and re-ingesting double-counts, as with any
-    replay-after-checkpoint-loss.
+    Both writes are ``streaming.sink.write_batch`` dynamic partition
+    overwrites keyed on ``batch_id``: a crash REPLAY of a micro-batch
+    rewrites its own partitions instead of double-appending.  Each doc
+    id must arrive in exactly one batch — the Structured Streaming
+    checkpoint guarantees it; losing the checkpoint and re-ingesting
+    double-counts, as with any replay-after-checkpoint-loss.
 
     One corpus pass per append (r14): the meta scalars ride the
     postings-write job as ``observe`` metrics on the doc-level node
@@ -332,22 +332,15 @@ def append_bm25_stream_batch(batch_df: DataFrame, batch_id: int,
     tf = (_tf_from_sorted(base)
           .select("term", "doc_id", "dl", "tf")
           .withColumn("tbucket", F.pmod(F.xxhash64("term"),
-                                        F.lit(n_buckets)))
-          .withColumn("batch_id", F.lit(batch_id)))
-    (tf.write.mode("overwrite")
-       .option("partitionOverwriteMode", "dynamic")
-       .partitionBy("batch_id", "tbucket")
-       .parquet(index_dir + "/postings"))
+                                        F.lit(n_buckets))))
+    write_batch(tf, batch_id, index_dir + "/postings", "tbucket")
     m = obs.get
     sum_dl = m["sum_dl"]
-    (tiny_df(batch_df.sparkSession,
-             [(int(m["n_docs"]),
-               int(sum_dl) if sum_dl is not None else None)],
-             "n_docs long, sum_dl long")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(index_dir + "/meta"))
+    write_batch(tiny_df(batch_df.sparkSession,
+                        [(int(m["n_docs"]),
+                          int(sum_dl) if sum_dl is not None else None)],
+                        "n_docs long, sum_dl long"),
+                batch_id, index_dir + "/meta")
 
 
 def compact_bm25_stream_index(spark, index_dir: str,

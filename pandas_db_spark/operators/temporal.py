@@ -30,7 +30,7 @@ from pyspark.sql import functions as F
 
 from pandas_db_spark.session import tiny_df
 
-from pandas_db_spark.plans.checkpoint import truncate_lineage as _truncate
+from pandas_db_spark.plans.checkpoint import truncate_lineage
 
 _SIDE = "__side"
 _TS = "__ts"
@@ -432,7 +432,7 @@ def concurrency_profile(intervals: DataFrame, lo: str = "lo",
                 max(2, deltas.sparkSession.sparkContext
                     .defaultParallelism), "ts_us")
             .withColumn("__pid", F.spark_partition_id())
-            .transform(_truncate))
+            .transform(truncate_lineage))
     w = (Window.partitionBy("__pid").orderBy("ts_us")
          .rowsBetween(Window.unboundedPreceding, 0))
     run = part.withColumn("__run", F.sum("__d").over(w))

@@ -1,10 +1,7 @@
 """Lineage-truncation helpers shared by every iterative / multi-consumer
 operator (graph rounds, BPE fitting, incremental dedup, LM scoring,
-duplicate-subtree materialization).
-
-Promoted out of ``operators/graph.py`` in r15 (ADVICE r14: four modules
-were importing the private ``graph._truncate``); ``graph._truncate``
-remains as an alias so existing imports and call sites keep working.
+duplicate-subtree materialization).  Callers import
+:func:`truncate_lineage` from here directly; there is no alias.
 """
 
 from __future__ import annotations
@@ -51,10 +48,11 @@ def truncate_lineage(df: DataFrame) -> DataFrame:
 def materialize_local(df: DataFrame) -> DataFrame:
     """``localCheckpoint(eager=True)`` REGARDLESS of the session's
     checkpoint dir — for corpus-sized intermediates that feed multiple
-    consumers inside ONE query (ADVICE r14 on strip_duplicate_spans):
-    shipping such a frame to the reliable checkpoint filesystem on a
-    cluster is pure IO/storage amplification; losing an executor during
-    the single query that owns it just recomputes that query, which is
-    the right trade for a scratch materialization (unlike an iterative
-    round vector, whose truncated lineage spans many jobs)."""
+    consumers inside ONE query (e.g. strip_duplicate_spans): shipping
+    such a frame to the reliable checkpoint filesystem on a cluster is
+    pure IO/storage amplification.  The trade: the lineage is truncated,
+    so losing an executor that holds a block FAILS the owning query
+    (Spark cannot recompute it); the caller can retry that one query.
+    That is the right trade for a scratch materialization, unlike an
+    iterative round vector, whose truncated lineage spans many jobs."""
     return df.localCheckpoint(eager=True)

@@ -4842,18 +4842,15 @@ def events_stream_dedup(spark, sf_dir):
     SQL, same pattern as events_stateful_totals."""
     from pandas_db_spark.sources.registry import events_stream_reader
     from pandas_db_spark.streaming import dedup as SD
+    from pandas_db_spark.streaming.sink import drain
     global _STREAM_DEDUP_SINK_N
     _STREAM_DEDUP_SINK_N = globals().get("_STREAM_DEDUP_SINK_N", 0) + 1
     sink = f"q_stream_dedup_{_STREAM_DEDUP_SINK_N}"
     stream = events_stream_reader(spark, sf_dir)
     out = SD.dedup_stream_unbounded(
         stream.select("user_id", "event_type"), ["user_id", "event_type"])
-    qr = (out.writeStream.format("memory").queryName(sink)
-             .outputMode("append").trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain(out.writeStream.format("memory").queryName(sink)
+          .outputMode("append"))
     return spark.table(sink)
 
 
@@ -5006,6 +5003,7 @@ def dedup_components_incremental(spark, sf_dir):
     minima."""
     from pandas_db_spark.operators import dedup as D
     from pandas_db_spark.operators import graph as G
+    from pandas_db_spark.plans.checkpoint import truncate_lineage
     d = get_db(spark, sf_dir).documents
     # materialize the pair stream ONCE: both batch filters below feed
     # separate materializing consumers (connected_components checkpoints
@@ -5013,7 +5011,7 @@ def dedup_components_incremental(spark, sf_dir):
     # the whole MinHash signature+banding+verify pipeline executes twice
     # (guide §1.2 step 1 — don't compute things twice)
     pairs = D.minhash_pairs(d.df, "text", "doc_id",
-                            threshold=0.8).transform(G._truncate)
+                            threshold=0.8).transform(truncate_lineage)
     b1 = pairs.where((F.col("id_a") + F.col("id_b")) % 2 == 0)
     b2 = pairs.where((F.col("id_a") + F.col("id_b")) % 2 != 0)
     store = G.connected_components(b1)

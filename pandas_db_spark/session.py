@@ -24,10 +24,6 @@ _RUNTIME_CONF = {
 }
 
 
-def runtime_conf() -> dict[str, str]:
-    return dict(_RUNTIME_CONF)
-
-
 def tiny_df(spark: SparkSession, rows: list, schema: str):
     """Driver-rows DataFrame as ONE partition.
 
@@ -85,14 +81,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         # Reliable-checkpoint hygiene (ADVICE r13): when a checkpoint dir
         # is set, every iterative operator writes DataFrame.checkpoint
-        # files per round (operators/graph._truncate); without this flag
-        # the ContextCleaner never deletes superseded checkpoints, so a
-        # 64-round k-core leaves dozens of full-dataset copies on HDFS/S3A
-        # for the application's lifetime.  Context-level conf — it must be
-        # on the builder (ContextCleaner reads it at SparkContext
-        # construction); sessions we did not build need it in their
-        # spark-submit conf, documented next to setCheckpointDir in
-        # graph._truncate.
+        # files per round (plans.checkpoint.truncate_lineage); without
+        # this flag the ContextCleaner never deletes superseded
+        # checkpoints, so a 64-round k-core leaves dozens of full-dataset
+        # copies on HDFS/S3A for the application's lifetime.
+        # Context-level conf — it must be on the builder (ContextCleaner
+        # reads it at SparkContext construction); sessions we did not
+        # build need it in their spark-submit conf, documented in
+        # truncate_lineage.
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
     )
     for k, v in _RUNTIME_CONF.items():

@@ -32,6 +32,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame, functions as F
 
+from pandas_db_spark.streaming.sink import drain
+
 
 def stream_static_join(stream_df: DataFrame, dim_df: DataFrame,
                        on: str | Sequence[str], how: str = "left",
@@ -60,10 +62,6 @@ def run_enriched(stream_df: DataFrame, dim_df: DataFrame,
     sink's table — the converged result equals the batch join."""
     out = stream_static_join(stream_df, dim_df, on, how=how,
                              broadcast_dim=broadcast_dim)
-    qr = (out.writeStream.format("memory").queryName(sink_name)
-          .outputMode("append").trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain(out.writeStream.format("memory").queryName(sink_name)
+          .outputMode("append"))
     return stream_df.sparkSession.table(sink_name)

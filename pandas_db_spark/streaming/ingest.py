@@ -26,13 +26,15 @@ dangerous case is a crash BETWEEN the corpus append and the store
 append, which replays that batch's rows with an empty store entry.
 ``partition_by_batch=True`` (default) closes it: the corpus write AND
 every store write (exact fingerprints, near sigs/docs, embedding
-keys/vecs — r9, per ADVICE r8) are batch-id-partitioned DYNAMIC
-overwrites, so a replayed batch_id rewrites its own partitions
+keys/vecs) go through ``streaming/sink.py``'s ``write_batch``, the one
+place the drain and replay contract lives: a batch-id-partitioned
+DYNAMIC overwrite, so a replayed batch_id rewrites its own partitions
 idempotently instead of appending a second copy (crash-replay asserted
-in ``tests/test_streaming.py``).  With ``partition_by_batch=False``
-the stores stay plain at-least-once appends — duplicate rows after a
-replay are harmless to the anti-join semantics (they only inflate
-candidate probes) and compactable offline
+in ``tests/test_streaming.py``).  Every runner here drains through
+``sink.drain_batches``, which skips empty micro-batches.  With
+``partition_by_batch=False`` the stores stay plain at-least-once
+appends — duplicate rows after a replay are harmless to the anti-join
+semantics (they only inflate candidate probes) and compactable offline
 (:func:`operators.similarity.compact_signlsh_store`).
 """
 
@@ -42,6 +44,7 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from pandas_db_spark.session import tiny_df
+from pandas_db_spark.streaming.sink import drain_batches, write_batch
 
 
 def _read_store(spark, path: str, schema: str) -> DataFrame:
@@ -91,7 +94,8 @@ def run_dedup_ingest(stream_df: DataFrame, text_col: str, id_col: str,
                      bloom_min_shared: int = 1,
                      quality_screen: bool = False,
                      screens: list | None = None) -> None:
-    """Drive the ingest over all available input (availableNow trigger).
+    """Drive the ingest over all available input
+    (``sink.drain_batches``; empty micro-batches are skipped).
 
     ``corpus_dir`` receives surviving documents (parquet, appended);
     ``store_dir`` the dedup state.  Both readable by any batch job
@@ -370,40 +374,22 @@ def run_dedup_ingest(stream_df: DataFrame, text_col: str, id_col: str,
         # ~22 s/batch flat; the re-execution, not the store probe, was
         # the cost).  The persisted frame is one micro-batch's
         # survivors — bounded by batch size, never the store.
-        kept = base_kept = (
-            batch_df.join(F.broadcast(kept_ids), id_col, "left_semi")
-            .persist())
-        if partition_by_batch:
-            # Idempotent replay: dynamic partition overwrite replaces ONLY
-            # the partitions present in this batch's data, so a replayed
-            # batch_id rewrites its own partition instead of appending a
-            # second copy (the crash-between-corpus-and-store-append case).
-            kept = kept.withColumn("batch_id", F.lit(batch_id))
-            (kept.write.mode("overwrite")
-                 .option("partitionOverwriteMode", "dynamic")
-                 .partitionBy("batch_id").parquet(corpus_dir))
-        else:
-            kept.write.mode("append").parquet(corpus_dir)
-        kept = kept.drop("batch_id")
+        kept = (batch_df.join(F.broadcast(kept_ids), id_col, "left_semi")
+                .persist())
 
         def store_write(df: DataFrame, path: str) -> None:
-            # Replay-idempotent store appends (r9, per ADVICE r8): the
-            # same batch-id-partitioned dynamic overwrite as the corpus
-            # sink, so a crash between the corpus write and the store
-            # write replays into the batch's OWN partition instead of
-            # double-appending (duplicate store rows were semantically
-            # harmless but inflated candidate probes over time).  With
-            # partition_by_batch=False the store stays plain append —
-            # at-least-once, compactable via compact_signlsh_store /
-            # an offline dropDuplicates.
+            # Replay-idempotent corpus and store writes: a crash between
+            # the corpus write and a store write replays into the batch's
+            # OWN partitions instead of double-appending.  With
+            # partition_by_batch=False they stay plain appends —
+            # at-least-once, compactable via compact_signlsh_store / an
+            # offline dropDuplicates.
             if partition_by_batch:
-                (df.withColumn("batch_id", F.lit(batch_id))
-                   .write.mode("overwrite")
-                   .option("partitionOverwriteMode", "dynamic")
-                   .partitionBy("batch_id").parquet(path))
+                write_batch(df, batch_id, path)
             else:
                 df.write.mode("append").parquet(path)
 
+        store_write(kept, corpus_dir)
         if mode == "exact":
             store_write(fingerprint_store(kept, text_col, id_col),
                         store_dir)
@@ -431,15 +417,9 @@ def run_dedup_ingest(stream_df: DataFrame, text_col: str, id_col: str,
                         store_dir + "/docs")
         if mode == "embedding":
             batch_keys.unpersist()
-        base_kept.unpersist()
+        kept.unpersist()
 
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain_batches(stream_df, checkpoint_dir, handle)
 
 
 def run_ivf_index_ingest(stream_df: DataFrame, index_dir: str,
@@ -488,8 +468,6 @@ def run_ivf_index_ingest(stream_df: DataFrame, index_dir: str,
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
         try:
             cent = _read_pinned_centroids(spark, index_dir)
         except ValueError:
@@ -511,21 +489,11 @@ def run_ivf_index_ingest(stream_df: DataFrame, index_dir: str,
                     "linearly.  Rebuild offline with a larger nlist "
                     "(build_ivf_index), then resume the stream.",
                     RuntimeWarning, stacklevel=2)
-        lists = (_assign_lists(batch_df, cent, id_col, vec_col)
-                 .join(batch_df, id_col)
-                 .withColumn("batch_id", F.lit(batch_id)))
-        (lists.write.mode("overwrite")
-              .option("partitionOverwriteMode", "dynamic")
-              .partitionBy("batch_id", "list_id")
-              .parquet(index_dir + "/vectors"))
+        lists = _assign_lists(batch_df, cent, id_col, vec_col).join(
+            batch_df, id_col)
+        write_batch(lists, batch_id, index_dir + "/vectors", "list_id")
 
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain_batches(stream_df, checkpoint_dir, handle)
 
 
 def run_bm25_index_ingest(stream_df: DataFrame, index_dir: str,
@@ -556,16 +524,6 @@ def run_bm25_index_ingest(stream_df: DataFrame, index_dir: str,
     quiesce/keep-the-checkpoint contract as ``compact_index``."""
     from pandas_db_spark.operators.retrieval import append_bm25_stream_batch
 
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_bm25_stream_batch(batch_df, batch_id, index_dir,
-                                 text_col, id_col, n_buckets)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_bm25_stream_batch(
+                      b, i, index_dir, text_col, id_col, n_buckets))

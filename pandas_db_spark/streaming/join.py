@@ -22,6 +22,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from pandas_db_spark.streaming.sink import drain
+
 
 def interval_join(left: DataFrame, right: DataFrame, key: str,
                   left_ts: str, right_ts: str,
@@ -69,12 +71,8 @@ def run_interval_join(left_stream: DataFrame, right_stream: DataFrame,
         ls = left_stream.withWatermark(left_ts, watermark)
         rs = right_stream.withWatermark(right_ts, watermark)
         out = interval_join(ls, rs, key, left_ts, right_ts, lower, upper)
-        qr = (out.writeStream.format("memory").queryName(sink_name)
-              .outputMode("append").trigger(availableNow=True).start())
-        try:
-            qr.processAllAvailable()
-        finally:
-            qr.stop()
+        drain(out.writeStream.format("memory").queryName(sink_name)
+              .outputMode("append"))
     finally:
         if state_partitions is not None:
             spark.conf.set("spark.sql.shuffle.partitions", prev)

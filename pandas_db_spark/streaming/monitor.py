@@ -24,12 +24,13 @@ Layout under ``monitor_dir`` (plain partitioned parquet):
   same exact-integer surface as ``corpus_drift_tvd``, so the series
   hash-compares against a whole-corpus batch replay bit-for-bit.
 
-Replay idempotence: both per-batch writes are dynamic partition
-overwrites keyed on ``batch_id`` — a crash replay rewrites its own
-partitions (the contract every sink in ``streaming/ingest.py`` honors).
-The drift row for batch N is recomputed FROM THE COUNTS STORE, so a
-replayed batch N produces the identical row even though later batches
-may already exist (the cumulative fold filters ``batch_id <= N``).
+Draining and replay idempotence live in ``streaming/sink.py``: every
+runner here drains through ``drain_batches`` and every per-batch write is
+a ``write_batch`` dynamic partition overwrite keyed on ``batch_id``, so a
+crash replay rewrites only its own partitions.  The drift row for batch
+N is recomputed FROM THE COUNTS STORE, so a replayed batch N produces the
+identical row even though later batches may already exist (the
+cumulative fold filters ``batch_id <= N``).
 
 Scale shape: per-batch cost is one token-count aggregate over the BATCH
 plus a groupBy-sum fold over the persisted per-batch vocab tables and
@@ -44,7 +45,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pandas_db_spark.operators.stats import drift_from_counts, term_counts
-
+from pandas_db_spark.streaming.sink import drain_batches, write_batch
 
 from pandas_db_spark.session import tiny_df as _tiny_df
 
@@ -100,11 +101,8 @@ def append_drift_batch(batch_df: DataFrame, batch_id: int,
     gate can replay batches deterministically without a checkpoint."""
     spark = batch_df.sparkSession
     _reference_counts(spark, monitor_dir, reference_df, text_col)
-    (term_counts(batch_df, text_col)
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(monitor_dir + "/counts"))
+    write_batch(term_counts(batch_df, text_col), batch_id,
+                monitor_dir + "/counts")
     # cumulative fold FROM THE STORE, bounded at this batch id, so a
     # replay of batch N yields batch N's row even after N+1 landed.
     # The fold is ONE spark.sql text (r14): the DataFrame form of the
@@ -137,35 +135,22 @@ def append_drift_batch(batch_df: DataFrame, batch_id: int,
         SELECT cast(sum(abs(u.c_a * sc.n_b - u.c_b * sc.n_a)) AS BIGINT)
                    AS tvd_num,
                cast(first(sc.n_a) AS BIGINT) AS n_corpus,
-               cast(first(sc.n_b) AS BIGINT) AS n_ref,
-               {int(batch_id)}L AS batch_id
+               cast(first(sc.n_b) AS BIGINT) AS n_ref
         FROM u CROSS JOIN sc""")
-    (row.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(monitor_dir + "/drift"))
+    write_batch(row, batch_id, monitor_dir + "/drift")
 
 
 def run_drift_monitor(stream_df: DataFrame, monitor_dir: str,
                       checkpoint_dir: str,
                       reference_df: DataFrame | None = None,
                       text_col: str = "text") -> None:
-    """Drive the monitor from a document stream (availableNow drain —
-    the module's standard wrapper).  ``reference_df`` is only consulted
+    """Drive the monitor from a document stream
+    (``sink.drain_batches``).  ``reference_df`` is only consulted
     on the very first batch ever; thereafter the pinned reference under
     ``monitor_dir/reference`` is authoritative."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_drift_batch(batch_df, batch_id, monitor_dir,
-                           reference_df, text_col)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_drift_batch(
+                      b, i, monitor_dir, reference_df, text_col))
 
 
 def drift_history(spark: SparkSession, monitor_dir: str) -> DataFrame:
@@ -425,37 +410,21 @@ def append_heavy_hitters_batch(batch_df: DataFrame, batch_id: int,
     # dynamic overwrite writes no partition; n_rows is the count of rows
     # just written (the integrity receipt _read_hh_state checks, ADVICE
     # r13), now known without re-reading the partition
-    (_tiny_df(spark, rows, "term string, c long")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/summary"))
-    meta = _tiny_df(
-        spark, [(prev_n + batch_n, prev_err + delta, n_rows, batch_id)],
-        "n_tokens long, err_ub long, n_rows long, batch_id long")
-    (meta.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/hhmeta"))
+    write_batch(_tiny_df(spark, rows, "term string, c long"), batch_id,
+                store_dir + "/summary")
+    meta = _tiny_df(spark, [(prev_n + batch_n, prev_err + delta, n_rows)],
+                    "n_tokens long, err_ub long, n_rows long")
+    write_batch(meta, batch_id, store_dir + "/hhmeta")
 
 
 def run_heavy_hitter_ingest(stream_df: DataFrame, store_dir: str,
                             checkpoint_dir: str, capacity: int = 4096,
                             text_col: str = "text") -> None:
     """Drive the bounded heavy-hitter store from a document stream
-    (availableNow drain — the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_heavy_hitters_batch(batch_df, batch_id, store_dir,
-                                   capacity, text_col)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_heavy_hitters_batch(
+                      b, i, store_dir, capacity, text_col))
 
 
 def heavy_hitters_topk(spark: SparkSession, store_dir: str,
@@ -514,11 +483,8 @@ def append_distinct_sketch_batch(batch_df: DataFrame, batch_id: int,
     row = toks.agg(
         F.hll_sketch_agg("term", F.lit(lg_k)).alias("sk"),
         F.count(F.lit(1)).cast("long").alias("n_tokens"))
-    (row.withColumn("lg_k", F.lit(lg_k))
-        .withColumn("batch_id", F.lit(batch_id))
-        .coalesce(1).write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id").parquet(store_dir + "/sketches"))
+    write_batch(row.withColumn("lg_k", F.lit(lg_k)).coalesce(1), batch_id,
+                store_dir + "/sketches")
 
 
 def distinct_estimate(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -538,21 +504,11 @@ def run_distinct_sketch_ingest(stream_df: DataFrame, store_dir: str,
                                checkpoint_dir: str,
                                text_col: str = "text",
                                lg_k: int = 12) -> None:
-    """Drive the sketch store from a document stream (availableNow
-    drain — the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_distinct_sketch_batch(batch_df, batch_id, store_dir,
-                                     text_col, lg_k)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    """Drive the sketch store from a document stream
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_distinct_sketch_batch(
+                      b, i, store_dir, text_col, lg_k))
 
 
 # ---------------------------------------------------------------------------
@@ -625,18 +581,12 @@ def append_kmv_batch(batch_df: DataFrame, batch_id: int, store_dir: str,
     n_rows = len(kept)
     # the write is issued even for an empty batch — exactly as before,
     # so the dataset directory exists and serves read it as 0 rows
-    (_tiny_df(spark, [(r["h"], r["item"]) for r in kept],
-              "h string, item string")
-     .withColumn("batch_id", F.lit(batch_id))
-     .write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/kmv"))
-    meta = _tiny_df(
-        spark, [(n_tokens, int(n_rows), int(k), batch_id)],
-        "n_tokens long, n_rows long, k long, batch_id long")
-    (meta.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/kmvmeta"))
+    write_batch(_tiny_df(spark, [(r["h"], r["item"]) for r in kept],
+                         "h string, item string"),
+                batch_id, store_dir + "/kmv")
+    meta = _tiny_df(spark, [(n_tokens, int(n_rows), int(k))],
+                    "n_tokens long, n_rows long, k long")
+    write_batch(meta, batch_id, store_dir + "/kmvmeta")
 
 
 def kmv_sample(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -759,20 +709,11 @@ def kmv_overlap(spark: SparkSession, store_a: str,
 def run_kmv_ingest(stream_df: DataFrame, store_dir: str,
                    checkpoint_dir: str, text_col: str = "text",
                    k: int = 256) -> None:
-    """Drive the KMV store from a document stream (availableNow drain —
-    the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_kmv_batch(batch_df, batch_id, store_dir, text_col, k)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    """Drive the KMV store from a document stream
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_kmv_batch(
+                      b, i, store_dir, text_col, k))
 
 
 def compact_kmv_store(spark: SparkSession, store_dir: str,
@@ -861,10 +802,7 @@ def append_histogram_batch(batch_df: DataFrame, batch_id: int,
     counts = (batch_df.where(v.isNotNull())
               .groupBy(bin_expr.alias("bin"))
               .agg(F.count(F.lit(1)).cast("long").alias("c")))
-    (counts.withColumn("batch_id", F.lit(batch_id))
-     .coalesce(1).write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/hist"))
+    write_batch(counts.coalesce(1), batch_id, store_dir + "/hist")
 
 
 def histogram_quantile_bounds(spark: SparkSession, store_dir: str,
@@ -917,21 +855,11 @@ def run_histogram_ingest(stream_df: DataFrame, store_dir: str,
                          checkpoint_dir: str, value_col: str,
                          lo: float, hi: float,
                          n_bins: int = 256) -> None:
-    """Drive the histogram store from a stream (availableNow drain —
-    the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_histogram_batch(batch_df, batch_id, store_dir,
-                               value_col, lo, hi, n_bins)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    """Drive the histogram store from a stream
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_histogram_batch(
+                      b, i, store_dir, value_col, lo, hi, n_bins))
 
 
 # ---------------------------------------------------------------------------
@@ -1023,18 +951,11 @@ def append_quantile_summary_batch(batch_df: DataFrame, batch_id: int,
             keep = _tiny_df(spark, rows, "v double, w long")
         else:  # sort-path fallback: NaN/inf data or degenerate range
             keep = _qsummary_keep_sorted(vals, n, m)
-        (keep.withColumn("batch_id", F.lit(batch_id))
-         .coalesce(1).write.mode("overwrite")
-         .option("partitionOverwriteMode", "dynamic")
-         .partitionBy("batch_id").parquet(store_dir + "/qsummary"))
+        write_batch(keep.coalesce(1), batch_id, store_dir + "/qsummary")
     meta = _tiny_df(
-        spark, [(int(n), int(m), int(m - 1 if n else 0), int(n_rows),
-                 batch_id)],
-        "n_values long, stride long, err_ub long, n_rows long, "
-        "batch_id long")
-    (meta.write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/qmeta"))
+        spark, [(int(n), int(m), int(m - 1 if n else 0), int(n_rows))],
+        "n_values long, stride long, err_ub long, n_rows long")
+    write_batch(meta, batch_id, store_dir + "/qmeta")
 
 
 def _qsummary_keep_sorted(vals: DataFrame, n: int, m: int) -> DataFrame:
@@ -1120,21 +1041,11 @@ def quantile_estimates(spark: SparkSession, store_dir: str,
 def run_quantile_summary_ingest(stream_df: DataFrame, store_dir: str,
                                 checkpoint_dir: str, value_col: str,
                                 k: int = 256) -> None:
-    """Drive the quantile summary store from a stream (availableNow
-    drain — the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_quantile_summary_batch(batch_df, batch_id, store_dir,
-                                      value_col, k)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    """Drive the quantile summary store from a stream
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_quantile_summary_batch(
+                      b, i, store_dir, value_col, k))
 
 
 def restratify_summary(spark: SparkSession, store_dir: str,
@@ -1257,10 +1168,7 @@ def append_grouped_quantile_batch(batch_df: DataFrame, batch_id: int,
     # <= k * |keys| rows — at web key cardinalities a single writer task
     # would bottleneck.  A small bounded fan-in keeps file counts sane
     # (compact_grouped_quantile_store folds the rest).
-    (keep.withColumn("batch_id", F.lit(batch_id))
-     .coalesce(8).write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/gqsummary"))
+    write_batch(keep.coalesce(8), batch_id, store_dir + "/gqsummary")
     # r14 optimization: the per-key ledger used to re-run the whole
     # batch window pass (a second sort of every value) just to count
     # per-key rows.  The weights of the rows just written already carry
@@ -1285,11 +1193,8 @@ def append_grouped_quantile_batch(batch_df: DataFrame, batch_id: int,
                     .alias("stride"), F.col("__rows"))
             .select("key", "n_values", "stride",
                     (F.col("stride") - 1).cast("long").alias("err_ub"),
-                    F.col("__rows").alias("n_rows"))
-            .withColumn("batch_id", F.lit(batch_id)))
-    (meta.coalesce(8).write.mode("overwrite")
-     .option("partitionOverwriteMode", "dynamic")
-     .partitionBy("batch_id").parquet(store_dir + "/gqmeta"))
+                    F.col("__rows").alias("n_rows")))
+    write_batch(meta.coalesce(8), batch_id, store_dir + "/gqmeta")
 
 
 def grouped_quantile_estimates(spark: SparkSession, store_dir: str,
@@ -1408,21 +1313,11 @@ def restratify_grouped_summary(spark: SparkSession, store_dir: str,
 def run_grouped_quantile_ingest(stream_df: DataFrame, store_dir: str,
                                 checkpoint_dir: str, key_col: str,
                                 value_col: str, k: int = 64) -> None:
-    """Drive the grouped quantile store from a stream (availableNow
-    drain — the module's standard wrapper)."""
-    def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        append_grouped_quantile_batch(batch_df, batch_id, store_dir,
-                                      key_col, value_col, k)
-
-    qr = (stream_df.writeStream.foreachBatch(handle)
-          .option("checkpointLocation", checkpoint_dir)
-          .trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    """Drive the grouped quantile store from a stream
+    (``sink.drain_batches``)."""
+    drain_batches(stream_df, checkpoint_dir,
+                  lambda b, i: append_grouped_quantile_batch(
+                      b, i, store_dir, key_col, value_col, k))
 
 
 def compact_grouped_quantile_store(spark: SparkSession, store_dir: str,

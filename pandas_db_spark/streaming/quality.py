@@ -32,6 +32,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame
 
 from pandas_db_spark.operators.quality import Rule, check_expectations
+from pandas_db_spark.streaming.sink import drain
 
 
 def stream_expectations(stream_df: DataFrame,
@@ -54,12 +55,8 @@ def run_quality_monitor(stream_df: DataFrame, rules: Sequence[Rule],
     complete mode) into a named in-memory sink; returns the sink table —
     converged totals equal the batch ``check_expectations`` row for row."""
     out = stream_expectations(stream_df, rules)
-    qr = (out.writeStream.format("memory").queryName(sink_name)
-          .outputMode("complete").trigger(availableNow=True).start())
-    try:
-        qr.processAllAvailable()
-    finally:
-        qr.stop()
+    drain(out.writeStream.format("memory").queryName(sink_name)
+          .outputMode("complete"))
     return stream_df.sparkSession.table(sink_name)
 
 

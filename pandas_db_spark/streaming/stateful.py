@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from pandas_db_spark.streaming.sink import drain
+
 _OUT_SCHEMA = "user_id bigint, n_events bigint, total_cents bigint"
 _STATE_SCHEMA = "n bigint, cents bigint"
 
@@ -102,13 +104,9 @@ def run_to_convergence(stream_df: DataFrame, sink_name: str,
     increasing per key, so max(struct(n_events, total_cents)) picks the last
     emission without assuming micro-batch count."""
     spark = stream_df.sparkSession
-    q = (running_totals_stream(stream_df, key_col, value_col)
-         .writeStream.format("memory").queryName(sink_name)
-         .outputMode("update").trigger(availableNow=True).start())
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
+    drain(running_totals_stream(stream_df, key_col, value_col)
+          .writeStream.format("memory").queryName(sink_name)
+          .outputMode("update"))
     emitted = spark.table(sink_name)
     final = F.max(F.struct("n_events", "total_cents")).alias("f")
     return (emitted.groupBy("user_id").agg(final)

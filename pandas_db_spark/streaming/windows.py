@@ -99,11 +99,3 @@ def sliding_stream(stream_df: DataFrame, ts_col: str = "ts",
     return sliding(stream_df.withWatermark(ts_col, watermark),
                    ts_col, duration, slide, value_col)
 
-
-def session_stream(stream_df: DataFrame, ts_col: str = "ts",
-                   gap: str = "15 minutes", watermark: str = "2 hours",
-                   keys: tuple[str, ...] = ("user_id",)) -> DataFrame:
-    """Streaming sessionization with watermarked state eviction."""
-    stream_df = stream_df.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return session(stream_df.withWatermark(ts_col, watermark), ts_col, gap,
-                   keys)

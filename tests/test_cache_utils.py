@@ -38,6 +38,38 @@ def test_cache_total_size_gate():
     assert "a" in c and "b" not in c
 
 
+def test_cache_put_is_atomic_under_threads():
+    """Concurrent puts of overlapping keys (the populate_cache thread
+    pool's access pattern) store each key once and keep ``_size`` equal
+    to the sum of the stored values' sizes.  A tiny thread switch
+    interval makes the threads interleave inside ``put``."""
+    import sys
+    import threading
+
+    from pandas_db_spark.cache import deep_sizeof
+
+    c = Cache()
+    barrier = threading.Barrier(8)
+
+    def worker(t):
+        barrier.wait()
+        for i in range(2000):
+            c.put(i % 300, [t, i, "v" * (i % 7)])
+
+    threads = [threading.Thread(target=worker, args=(t,)) for t in range(8)]
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join()
+    finally:
+        sys.setswitchinterval(old)
+    assert len(c) == 300
+    assert c._size == sum(deep_sizeof(c.get(k)) for k in range(300))
+
+
 def test_cache_disabled():
     c = Cache(cache=False)
     c.put("k", 1)

@@ -1105,6 +1105,18 @@ def test_sssp_validation(spark):
 # localCheckpoint default.
 
 
+def _signature(edges):
+    """(row count, order-insensitive xxhash64 sum) of an edge set from
+    its own aggregate job — the oracle for the observed signature of
+    ``graph._truncate_signed``."""
+    row = edges.agg(
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
+                   F.lit(0)).cast("decimal(38,0)").alias("h"),
+    ).collect()[0]
+    return int(row["n"]), int(row["h"])
+
+
 def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path):
     from pathlib import Path
 
@@ -1124,6 +1136,8 @@ def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path):
                 for r in pagerank(df, iterations=4).collect()}
     local_core = {r["id"]: r["core"]
                   for r in core_numbers(pairs).collect()}
+    e = spark.createDataFrame(edges, "u long, v long")
+    assert G._truncate_signed(e)[1] == _signature(e)
 
     ckdir = tmp_path / "reliable_ck"
     sc.setCheckpointDir(str(ckdir))
@@ -1132,6 +1146,7 @@ def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path):
                   for r in pagerank(df, iterations=4).collect()}
         rel_core = {r["id"]: r["core"]
                     for r in core_numbers(pairs).collect()}
+        assert G._truncate_signed(e)[1] == _signature(e)
         # bit-identical across checkpoint flavors (integer fixed point)
         assert rel_pr == local_pr
         assert rel_core == local_core
