@@ -15,9 +15,23 @@ from __future__ import annotations
 
 import sys
 import threading
-from typing import Any, Hashable
+from typing import TYPE_CHECKING, Any, Hashable
+
+if TYPE_CHECKING:
+    from pyspark.sql import DataFrame
 
 MB = 1024 * 1024
+
+
+def _plan_key(df: DataFrame) -> int | None:
+    """Stable fingerprint of the logical plan for result memoization.
+    On failure return None → the caller bypasses the cache entirely
+    (an id()-based fallback could collide after GC reuses the address and
+    serve a stale result for a different plan)."""
+    try:
+        return df.semanticHash()
+    except Exception:
+        return None
 
 
 def deep_sizeof(obj: Any, _seen: set[int] | None = None) -> int:

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pandas_db_spark.cache import Cache
+from pandas_db_spark.cache import Cache, _plan_key
 from pandas_db_spark.expression import Expression
 from pandas_db_spark.iloc import IndexLoc
 
@@ -43,17 +43,6 @@ _PY_TYPE = {
     T.ByteType: int, T.ShortType: int, T.IntegerType: int, T.LongType: int,
     T.FloatType: float, T.DoubleType: float,
 }
-
-
-def _plan_key(df: DataFrame) -> int | None:
-    """Stable fingerprint of the logical plan for result memoization.
-    On failure return None → the caller bypasses the cache entirely
-    (an id()-based fallback could collide after GC reuses the address and
-    serve a stale result for a different plan)."""
-    try:
-        return df.semanticHash()
-    except Exception:
-        return None
 
 
 class Column:

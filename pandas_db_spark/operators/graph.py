@@ -55,31 +55,36 @@ from pandas_db_spark.session import tiny_df
 from pandas_db_spark.plans.checkpoint import truncate_lineage
 
 
-def _truncate_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
-    """:func:`truncate_lineage` plus the edge set's convergence signature
-    ``(row count, order-insensitive xxhash64 sum)`` in ONE job: the
-    signature rides the checkpoint materialization as ``observe``
+def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
+    """:func:`truncate_lineage` plus the aggregates ``aggs`` over ``df``
+    in ONE job: they ride the checkpoint materialization as ``observe``
     metrics — the same fold-the-probe-into-the-write move as the BM25
     meta observe (exact under task retries, SPARK-29345) — instead of
-    paying a second full pass over the edge set per CC round.  Both eager
-    checkpoint flavors run under ``withAction``, so the observation
-    fires when the materialization job completes (verified on local
-    and reliable checkpoints; ``tests/test_graph.py`` checks the
-    observed values against a separate aggregate job).
+    paying a second full pass per round.  Both eager checkpoint flavors
+    run under ``withAction``, so the observation fires when the
+    materialization job completes (verified on local and reliable
+    checkpoints; ``tests/test_graph.py`` checks the observed values
+    against a separate aggregate job)."""
+    from pyspark.sql import Observation
+    obs = Observation()
+    out = truncate_lineage(df.observe(obs, *aggs))
+    return out, obs.get
+
+
+def _truncate_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
+    """:func:`truncate_lineage` plus the edge set's convergence signature
+    ``(row count, order-insensitive xxhash64 sum)``, observed on the
+    checkpoint job.
 
     large/small-star is monotone (edge sets converge to the star
     forest), so signature equality ⇒ fixpoint for any practical purpose
     (a 64-bit sum collision that ALSO preserves the count is ~2⁻⁶⁴ per
     round).  The sum is decimal(38,0): exact and overflow-free under
     ANSI mode."""
-    from pyspark.sql import Observation
-    obs = Observation()
-    signed = edges.observe(
-        obs, F.count(F.lit(1)).alias("n"),
+    out, m = _checkpoint_observed(
+        edges, F.count(F.lit(1)).alias("n"),
         F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
                    F.lit(0)).cast("decimal(38,0)").alias("h"))
-    out = truncate_lineage(signed)
-    m = obs.get
     return out, (int(m["n"]), int(m["h"]))
 
 
@@ -1139,9 +1144,8 @@ def core_numbers(pairs: DataFrame, id_a: str = "id_a",
     proves convergence (c_{t+1} ≤ c_t POINTWISE, from the degree
     start) makes sum equality ⟺ pointwise equality — an exact test,
     not a hash — so the round needs NO old-vs-new join and no second
-    value column; the scalar rides one cheap aggregate over the
-    checkpointed state (r14: dropping the per-round re-join halved
-    the measured query time at sf0.1).  Lineage truncates per round.
+    value column; the scalar is observed on the round's checkpoint
+    job, so a round is one job.  Lineage truncates per round.
 
     Round count is data-dependent: dense social/co-occurrence graphs
     converge in ~10 rounds, while a PATH graph needs O(n) (each end's
@@ -1165,33 +1169,29 @@ def core_numbers(pairs: DataFrame, id_a: str = "id_a",
     sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
            .repartition("a")
            .transform(truncate_lineage))
-    vals = (sym.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
-            .select(F.col("a").alias("id"), F.col("c").cast("long")
-                    .alias("c"))
-            .transform(truncate_lineage))
-    # Σ degree = 2m, exact in int64 for any m < 2^62 (the overflow
-    # headroom of the coreness sums below is even wider: c ≤ degree)
-    prev_sum = vals.agg(
-        F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
+    # Σ c rides each checkpoint job.  Σ degree = 2m, exact in int64 for
+    # any m < 2^62 (the coreness sums below are smaller still: c ≤ degree)
+    sum_c = F.coalesce(F.sum("c"), F.lit(0)).alias("s")
+    vals, m = _checkpoint_observed(
+        sym.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
+           .select(F.col("a").alias("id"), F.col("c").cast("long")
+                   .alias("c")), sum_c)
+    prev_sum = m["s"]
     for _ in range(max_rounds):
-        state = (sym.join(vals.select(F.col("id").alias("b"),
-                                      F.col("c").alias("nc")), "b")
-                 .groupBy("a")
-                 .agg(F.sort_array(F.collect_list("nc"), asc=False)
-                      .alias("vs"))
-                 .select(F.col("a").alias("id"),
-                         F.expr("cast(size(filter(vs, (x, i) -> "
-                                "x >= i + 1)) as long)").alias("c"))
-                 .transform(truncate_lineage))
+        vals, m = _checkpoint_observed(
+            sym.join(vals.select(F.col("id").alias("b"),
+                                 F.col("c").alias("nc")), "b")
+               .groupBy("a")
+               .agg(F.sort_array(F.collect_list("nc"), asc=False)
+                    .alias("vs"))
+               .select(F.col("a").alias("id"),
+                       F.expr("cast(size(filter(vs, (x, i) -> "
+                              "x >= i + 1)) as long)").alias("c")), sum_c)
         # sum equality ⟺ pointwise fixpoint (monotone non-increasing
-        # sequence) — one scalar aggregate over checkpointed rows, no
-        # old-vs-new join and no second value column in the state
-        new_sum = state.agg(
-            F.coalesce(F.sum("c"), F.lit(0))).collect()[0][0]
-        vals = state
-        if new_sum == prev_sum:
+        # sequence): no old-vs-new join and no second value column
+        if m["s"] == prev_sum:
             return vals.select("id", F.col("c").alias("core"))
-        prev_sum = new_sum
+        prev_sum = m["s"]
     raise RuntimeError(
         f"core_numbers did not converge in {max_rounds} rounds — "
         "deep-chain topology; raise max_rounds deliberately or peel "

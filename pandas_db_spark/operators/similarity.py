@@ -63,7 +63,7 @@ def cosine_sim(a, b) -> F.Column:
 # The auto-geometry paths need |corpus| at construction.  A raw count()
 # re-runs the upstream plan every call — counter to the lazy-construction
 # discipline — so counts are memoized by the plan's semanticHash (the same
-# key discipline as `column._plan_key` / the reference's fetchall memo):
+# key discipline as `cache._plan_key` / the reference's fetchall memo):
 # repeated LSH construction over the same registered table costs zero jobs
 # after the first.  Callers with a cheaper source of n (catalog stats, a
 # prior count) pass it via the `n=` hint and skip the count entirely.

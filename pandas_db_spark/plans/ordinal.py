@@ -39,6 +39,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from pandas_db_spark.cache import _plan_key
+
 ORDINAL_COL = "__pdbs_ord__"
 _MID_COL = "__pdbs_mid__"
 _LOCAL_MASK = (1 << 33) - 1
@@ -48,13 +50,6 @@ _LOCAL_MASK = (1 << 33) - 1
 # instead of re-materializing.  Evicted entries are unpersisted.
 _CACHE_CAP = 8
 _cache: OrderedDict[int, tuple[DataFrame, int, DataFrame]] = OrderedDict()
-
-
-def _plan_key(df: DataFrame) -> int | None:
-    try:
-        return df.semanticHash()
-    except Exception:
-        return None  # no memoization rather than an id()-reuse collision
 
 
 def with_ordinal_and_count(df: DataFrame) -> tuple[DataFrame, int]:

@@ -27,67 +27,78 @@ from pandas_db_spark.utils import normalize_col
 SUPPORTED_FILE_EXTENSIONS = (".sql", ".db", ".sqlite", ".sqlite3")
 
 
+def _first_data_file(path: str) -> str:
+    """``path`` itself, or for a directory dataset the first data file of a
+    sorted walk that skips Spark's hidden ``_``/``.`` names."""
+    if not os.path.isdir(path):
+        return path
+    for root, dirs, files in os.walk(path):
+        dirs[:] = sorted(d for d in dirs if not d.startswith(("_", ".")))
+        for f in sorted(files):
+            if not f.startswith(("_", ".")):
+                return os.path.join(root, f)
+    return path
+
+
 def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark's reader cannot
-    infer those (PARQUET_TYPE_ILLEGAL), so they need the nanosAsLong path.
-    Footer-only pyarrow inspection; no data read."""
+    """Top-level columns stored as INT64 TIMESTAMP(NANOS), which Spark
+    cannot infer a type for (PARQUET_TYPE_ILLEGAL).  Reads the parquet
+    footer schema, not the arrow one: arrow reports INT96 timestamps as
+    ``timestamp[ns]`` too, and Spark reads those natively."""
+    import json
+
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     try:
-        schema = pq.read_schema(path)
-    except Exception:
-        return []
-    return [
-        f.name
-        for f in schema
-        if pa.types.is_timestamp(f.type) and f.type.unit == "ns"
-    ]
+        schema = pq.read_metadata(_first_data_file(path)).schema
+    except (OSError, pa.ArrowException):
+        return []  # not a local parquet footer: Spark's own read decides
+    cols = (schema.column(i) for i in range(len(schema)))
+    return [c.name for c in cols
+            if c.path == c.name and c.physical_type == "INT64"
+            and c.logical_type.type == "TIMESTAMP"
+            and json.loads(c.logical_type.to_json())["timeUnit"]
+            == "nanoseconds"]
+
+
+def _read_schema(spark: SparkSession, path: str, ns_cols: list[str]):
+    """The schema Spark infers for ``path``, with ``ns_cols`` as ``long``.
+
+    Only the inference needs ``spark.sql.legacy.parquet.nanosAsLong``; a
+    read given this schema returns the longs without it.  So the conf is
+    set in a fresh session that carries the caller's modifiable
+    ``spark.sql.*`` settings, and the caller's session is never written."""
+    if not ns_cols:
+        return spark.read.parquet(path).schema
+    iso = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if k.startswith("spark.sql.") and spark.conf.isModifiable(k):
+            iso.conf.set(k, v)
+    iso.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    return iso.read.parquet(path).schema
+
+
+def _nanos_to_ntz(df: DataFrame, ns_cols: list[str]) -> DataFrame:
+    """Long epoch nanos → ``timestamp_ntz`` via integer ``div 1000`` +
+    ``timestampadd``: exact to the microsecond, independent of the session
+    timezone (a double division would lose bits on int64 epochs)."""
+    return df.withColumns({
+        c: F.expr(f"timestampadd(MICROSECOND, `{c}` div 1000, "
+                  f"TIMESTAMP_NTZ '1970-01-01 00:00:00')")
+        for c in ns_cols})
 
 
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet`` that tolerates nanosecond timestamps.
-
-    Files with TIMESTAMP(NANOS) columns are read with
-    ``spark.sql.legacy.parquet.nanosAsLong`` (vectorized scan intact) and the
-    long nanos are converted JVM-side to ``timestamp_ntz`` via integer
-    ``div 1000`` + ``timestampadd`` — exact to the microsecond, independent of
-    session timezone, no precision loss (a double division would lose bits on
-    int64 epochs).  Everything else is a plain native read.
-    """
+    """``spark.read.parquet`` that tolerates nanosecond timestamps: their
+    columns are read as longs through an explicit schema (vectorized scan
+    intact) and converted to ``timestamp_ntz`` at µs precision.  Everything
+    else is a plain native read."""
     ns_cols = _nanos_timestamp_cols(path)
     if not ns_cols:
         return spark.read.parquet(path)
-    # nanosAsLong is read at *scan definition* time, so it only needs to be
-    # set while building the plan; restore the previous value afterwards so
-    # a shared user session keeps its own semantics for unrelated reads.
-    conf_key = "spark.sql.legacy.parquet.nanosAsLong"
-    try:
-        prev = spark.conf.get(conf_key)
-    except Exception:
-        prev = None
-    spark.conf.set(conf_key, "true")
-    try:
-        df = spark.read.parquet(path)
-        for c in ns_cols:
-            df = df.withColumn(
-                c,
-                F.expr(
-                    f"timestampadd(MICROSECOND, `{c}` div 1000, "
-                    f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-                ),
-            )
-        # Force plan analysis while the conf is active.
-        df.schema
-    finally:
-        if prev is None:
-            try:
-                spark.conf.unset(conf_key)
-            except Exception:
-                pass
-        else:
-            spark.conf.set(conf_key, prev)
-    return df
+    schema = _read_schema(spark, path, ns_cols)
+    return _nanos_to_ntz(spark.read.schema(schema).parquet(path), ns_cols)
 
 
 def discover_tables(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -450,80 +461,6 @@ def compact_parquet(spark, path: str, out_path: str,
     return n
 
 
-_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
-
-# One restore listener per session — repeat reader calls re-arm the
-# existing listener instead of stacking inert ones on the listener bus.
-# Weak keys: a stopped/garbage-collected session must not be pinned by its
-# restore state (the listener itself dies with the session's bus).
-import weakref
-
-_NANOS_RESTORERS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _arm_nanos_restore(spark: SparkSession, prior: str | None) -> None:
-    """Arm a listener that restores ``nanosAsLong`` to ``prior`` once the
-    session has no active streaming queries left.
-
-    Streaming file scans re-check the conf at (re)start, so it must stay
-    set while any stream that needs it is alive — but leaving it set
-    forever (the round-4 verdict's #2 defect) silently turns every later
-    BATCH read of a nanos-timestamp parquet in the same session into longs.
-
-    Race discipline: the restore only fires after SOME stream has started
-    since (re)arming (the "started" flag), so building a reader and then
-    having a pre-existing stream terminate cannot yank the conf from the
-    not-yet-started stream.  Every reader call re-arms (started=False),
-    including while streams are active, which also covers building a
-    second reader mid-flight.  Residual window, documented honestly: the
-    listener cannot tell WHICH query started — an unrelated stream that
-    both starts and terminates after arming, while the armed reader has
-    still never started, restores early; call the reader again before
-    ``.start()`` to re-set the conf.  After restoring, the listener
-    disarms; a fresh reader call is likewise the supported way to restart
-    a stopped stream (the file source re-reads the conf at start)."""
-    state = _NANOS_RESTORERS.get(spark)
-    if state is not None:
-        if not state["armed"]:
-            state["prior"] = prior  # conf was restored since; take new prior
-            state["armed"] = True
-        # re-arm: a new not-yet-started reader exists, so a terminate of
-        # the previous streams must not restore until a start is seen again
-        state["started"] = False
-        return
-
-    from pyspark.sql.streaming import StreamingQueryListener
-
-    state = {"armed": True, "started": False, "prior": prior}
-
-    class _Restore(StreamingQueryListener):
-        def onQueryStarted(self, event):
-            if state["armed"]:
-                state["started"] = True
-
-        def onQueryProgress(self, event):
-            pass
-
-        def onQueryIdle(self, event):
-            pass
-
-        def onQueryTerminated(self, event):
-            if not (state["armed"] and state["started"]):
-                return
-            try:
-                if not spark.streams.active:
-                    state["armed"] = False
-                    if state["prior"] is None:
-                        spark.conf.unset(_NANOS_CONF)
-                    else:
-                        spark.conf.set(_NANOS_CONF, state["prior"])
-            except Exception:
-                pass  # conf hygiene must never kill the listener bus
-
-    _NANOS_RESTORERS[spark] = state
-    spark.streams.addListener(_Restore())
-
-
 def _hadoop_isdir(spark: SparkSession, path: str) -> bool:
     """Directory test through the Hadoop FileSystem API — correct for
     local, HDFS and S3A paths alike (``os.path.isdir`` only sees the
@@ -553,18 +490,7 @@ def events_stream_reader(spark: SparkSession, sf_dir: str):
     Nanos timestamps arrive as longs and are converted like the batch path."""
     path = os.path.join(sf_dir, "events.parquet")
     ns_cols = _nanos_timestamp_cols(path)
-    if ns_cols:
-        try:
-            prior = spark.conf.get(_NANOS_CONF)
-        except Exception:
-            prior = None
-        spark.conf.set(_NANOS_CONF, "true")
-        # Arm unconditionally: even when the conf was already "true" from
-        # an armed earlier reader, this new reader has not started yet and
-        # must reset the started flag (otherwise the earlier stream's
-        # terminate would restore the conf from under this one).
-        _arm_nanos_restore(spark, prior)
-    schema = spark.read.parquet(path).schema
+    schema = _read_schema(spark, path, ns_cols)
     # File stream sources need a directory.  Two dataset shapes exist:
     # a DIRECTORY named events.parquet (anything Spark wrote — the
     # production shape) streams directly from that directory; a single
@@ -582,15 +508,7 @@ def events_stream_reader(spark: SparkSession, sf_dir: str):
         stream = (spark.readStream.schema(schema)
                   .option("pathGlobFilter", "events.parquet*")
                   .parquet(sf_dir))
-    for c in ns_cols:
-        stream = stream.withColumn(
-            c,
-            F.expr(
-                f"timestampadd(MICROSECOND, `{c}` div 1000, "
-                f"TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    return stream
+    return _nanos_to_ntz(stream, ns_cols)
 
 
 def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite",

@@ -22,8 +22,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pandas_db_spark.cache import Cache
-from pandas_db_spark.column import Column, _plan_key
+from pandas_db_spark.cache import Cache, _plan_key
+from pandas_db_spark.column import Column
 from pandas_db_spark.exceptions import InvalidColumnError
 from pandas_db_spark.expression import Expression
 from pandas_db_spark.iloc import IndexLoc

@@ -1,3 +1,6 @@
+import pytest
+
+from tests.conftest import nanos_events_table
 
 
 def test_missing_attr_probe_does_not_relist(spark, tmp_path, monkeypatch):
@@ -31,3 +34,31 @@ def test_missing_attr_probe_does_not_relist(spark, tmp_path, monkeypatch):
                 tmp_path / "nation.parquet")
     assert db.nation.len == 25
     assert len(calls) == 2
+
+
+@pytest.mark.parametrize("layout", ["int96_file", "nanos_dir"])
+def test_timestamp_parquet_layouts_open(spark, tmp_path, layout):
+    """An INT96 file (arrow reports it as ``timestamp[ns]``, Spark reads it
+    natively) and a directory dataset holding TIMESTAMP(NANOS) both open
+    as tables and answer ``len`` and ``min`` on the timestamp column."""
+    import datetime as dt
+
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from pandas_db_spark import Database
+
+    if layout == "int96_file":
+        path = tmp_path / "events.parquet"
+        pq.write_table(nanos_events_table(), str(path),
+                       use_deprecated_int96_timestamps=True)
+        want = spark.read.parquet(str(path)).agg(F.min("ts")).first()[0]
+    else:
+        path = tmp_path / "events.parquet" / "part-0.parquet"
+        path.parent.mkdir()
+        pq.write_table(nanos_events_table(), str(path),
+                       coerce_timestamps=None)
+        want = dt.datetime(2024, 1, 1)
+    db = Database(str(tmp_path), spark=spark)
+    assert len(db.events) == 3
+    assert db.events.ts.min() == want

@@ -11,6 +11,7 @@ from pyspark.sql import functions as F
 
 from pandas_db_spark.sources.registry import events_stream_reader, read_parquet
 from pandas_db_spark.streaming import windows as W
+from tests.conftest import nanos_events_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -200,48 +201,87 @@ def test_stream_dedup_watermarked_runs(spark):
     assert len(rows) == len(keys) > 0
 
 
-def test_stream_reader_restores_nanos_conf(spark, tmp_path):
-    """Conf hygiene (round-4 verdict #2): events_stream_reader sets
-    spark.sql.legacy.parquet.nanosAsLong for the stream's lifetime, but a
-    later unrelated BATCH read in the same session must not silently get
-    longs — the conf must revert once no streams remain active."""
-    import time
+@pytest.mark.parametrize("layout", ["file", "dir"])
+def test_nanos_reads_never_change_session_conf(spark, tmp_path, layout):
+    """Reading TIMESTAMP(NANOS) parquet as a batch, as a stream and by
+    draining that stream leaves spark.sql.legacy.parquet.nanosAsLong of
+    the caller's session as it was, so a later plain batch read in the
+    same session never silently gets longs."""
+    import datetime as dt
 
-    import pandas as pd
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.types import LongType, TimestampNTZType
+
+    path = tmp_path / "events.parquet"
+    if layout == "dir":
+        path.mkdir()
+    pq.write_table(nanos_events_table(),
+                   str(path / "part-0.parquet" if layout == "dir" else path),
+                   coerce_timestamps=None)
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+
+    def conf():
+        return spark.conf.getAll.get(key), spark.conf.get(key)
+
+    before = conf()
+    batch = read_parquet(spark, str(path))
+    assert conf() == before
+    stream = events_stream_reader(spark, str(tmp_path))
+    assert conf() == before
+    name = f"t_nanos_conf_{layout}"
+    q = (stream.writeStream.format("memory").queryName(name)
+               .trigger(availableNow=True).start())
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert conf() == before
+
+    want = [dt.datetime(2024, 1, 1), dt.datetime(2024, 1, 1, 0, 0, 1, 500000),
+            dt.datetime(2024, 1, 1, 0, 1)]
+    for df in (batch, spark.table(name)):
+        assert isinstance(df.schema["ts"].dataType, TimestampNTZType)
+        assert [r.ts for r in df.orderBy("event_id").collect()] == want
+    try:
+        plain = spark.read.parquet(str(path)).schema["ts"].dataType
+    except AnalysisException:
+        plain = None  # PARQUET_TYPE_ILLEGAL: Spark's own nanos refusal
+    assert not isinstance(plain, LongType)
+
+
+def test_nanos_schema_matches_caller_inference(spark, tmp_path):
+    """The schema inferred for a nanos file is the one the caller's own
+    session infers with nanosAsLong on: micros-NTZ and UTC-adjusted
+    columns follow the caller's inferTimestampNTZ setting."""
     import pyarrow as pa
     import pyarrow.parquet as pq
+    from pyspark.sql.types import LongType, TimestampType
 
-    # synthesize an events dir whose ts is TIMESTAMP(NANOS) — the driver
-    # testdata uses micros, which never triggers the conf path
-    tbl = pa.table({
-        "event_id": pa.array([1, 2, 3], pa.int64()),
-        "ts": pa.array(pd.to_datetime(
-            ["2024-01-01 00:00:00.000000001",
-             "2024-01-01 00:00:01.500000000",
-             "2024-01-01 00:01:00.000000000"], format="ISO8601"),
-            pa.timestamp("ns")),
-        "user_id": pa.array([10, 10, 11], pa.int64()),
-        "event_type": pa.array(["a", "b", "a"], pa.string()),
-        "value": pa.array([1.0, 2.0, 3.0], pa.float64()),
-    })
-    pq.write_table(tbl, str(tmp_path / "events.parquet"),
-                   coerce_timestamps=None)
+    from pandas_db_spark.sources.registry import _read_schema
 
-    key = "spark.sql.legacy.parquet.nanosAsLong"
-    prior = spark.conf.get(key)
-    assert prior != "true"  # precondition: the leak would be observable
-    stream = events_stream_reader(spark, str(tmp_path))
-    assert spark.conf.get(key) == "true"
-    q = (stream.groupBy("event_type").count()
-               .writeStream.format("memory").queryName("t_conf_hygiene")
-               .outputMode("complete").trigger(availableNow=True).start())
-    q.processAllAvailable()
-    q.stop()
-    q.awaitTermination(30)
-    deadline = time.time() + 20
-    while time.time() < deadline and spark.conf.get(key) != prior:
-        time.sleep(0.25)
-    assert spark.conf.get(key) == prior
+    path = str(tmp_path / "events.parquet")
+    pq.write_table(nanos_events_table(
+        tm=pa.array([1, 2, 3], pa.timestamp("us")),
+        tz=pa.array([1, 2, 3], pa.timestamp("us", tz="UTC"))),
+        path, coerce_timestamps=None)
+    ntz = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    nanos = "spark.sql.legacy.parquet.nanosAsLong"
+    prior = {k: spark.conf.getAll.get(k) for k in (ntz, nanos)}
+    spark.conf.set(ntz, "false")
+    try:
+        got = _read_schema(spark, path, ["ts"])
+        spark.conf.set(nanos, "true")
+        want = spark.read.parquet(path).schema
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert got == want
+    assert isinstance(got["ts"].dataType, LongType)
+    assert isinstance(got["tm"].dataType, TimestampType)
 
 
 def test_stream_static_join_batch_equals_stream(spark, db):
