@@ -57,6 +57,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from pandas_db_spark.functions.text import word_shingles
+from pandas_db_spark.streaming.sink import dedup_rewrite
 
 # Universal-hash family over Z_p, p = 2³¹-1 (Mersenne prime).  Base hashes
 # and multipliers both live below 2³¹, so aᵢ·h + bᵢ < 2⁶³ — no ANSI-mode
@@ -1139,7 +1140,7 @@ def compact_dedup_store(spark, store_dir: str, mode: str = "exact",
                         id_col: str = "doc_id",
                         n_files: int = 8) -> None:
     """Offline compaction for the exact / near streaming-ingest stores —
-    the text siblings of ``similarity.compact_signlsh_store`` (r9):
+    the text siblings of ``similarity.compact_signlsh_store``:
     drop the duplicate rows that at-least-once appends accumulate across
     replays and coalesce thousands of micro-batch small files into
     ``n_files`` per table.  ``mode="exact"`` compacts the (digest, id)
@@ -1150,9 +1151,8 @@ def compact_dedup_store(spark, store_dir: str, mode: str = "exact",
     micro-batch id, so later per-batch dynamic overwrites cannot touch
     compacted rows); unpartitioned stores stay unpartitioned.  Offline
     contract: run between ingest runs; the rewrite is staged (old data
-    survives a crash in a ``.__stage_old`` sibling), and re-running is
-    idempotent."""
-    from pandas_db_spark.operators.similarity import _staged_overwrite
+    survives a crash in a ``.__stage_old`` sibling and is rolled back on
+    the next run), and re-running is idempotent."""
     if mode == "exact":
         tables = [("", ["digest", "id"])]
     elif mode == "near":
@@ -1161,16 +1161,7 @@ def compact_dedup_store(spark, store_dir: str, mode: str = "exact",
         raise ValueError(f"compact_dedup_store: unknown mode {mode!r} "
                          "(embedding stores: compact_signlsh_store)")
     for sub, dedup_cols in tables:
-        df = spark.read.parquet(store_dir + sub)
-        part = None
-        if "batch_id" in df.columns:
-            df = (df.dropDuplicates(dedup_cols)
-                    .withColumn("batch_id", F.lit(-1)))
-            part = "batch_id"
-        else:
-            df = df.dropDuplicates(dedup_cols)
-        _staged_overwrite(df, store_dir + sub, partition_by=part,
-                          n_files=n_files)
+        dedup_rewrite(spark, store_dir + sub, dedup_cols, n_files)
 
 
 def dedup_incremental(new_docs: DataFrame, store: DataFrame,

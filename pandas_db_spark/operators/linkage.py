@@ -162,16 +162,17 @@ def sorted_neighborhood_pairs(df: DataFrame, key, id_col: str,
             "pass text_col and max_dist together (or neither)")
     if max_dist is not None and max_dist < 0:
         raise ValueError(f"max_dist must be >= 0, got {max_dist}")
-    from pandas_db_spark.plans.ordinal import ORDINAL_COL, with_ordinal
+    from pandas_db_spark.plans.ordinal import (ORDINAL_COL,
+                                              with_ordinal_and_count)
 
     cols = [_as_col(id_col).alias("__id"), _as_col(key).alias("__k")]
     if text_col is not None:
         cols.append(_as_col(text_col).alias("__t"))
     base = df.select(*cols).where(F.col("__k").isNotNull())
     n_part = max(2, df.sparkSession.sparkContext.defaultParallelism)
-    ranked = with_ordinal(
+    ranked = with_ordinal_and_count(
         base.repartitionByRange(n_part, F.col("__k"), F.col("__id"))
-            .sortWithinPartitions("__k", "__id"))
+            .sortWithinPartitions("__k", "__id"))[0]
     a_cols = [F.col("__id").alias("id_a"),
               F.col(ORDINAL_COL).alias("__ra")]
     b_cols = [F.col("__id").alias("id_b"),

@@ -33,7 +33,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from pandas_db_spark.session import tiny_df
-from pandas_db_spark.streaming.sink import write_batch
+from pandas_db_spark.streaming.sink import compact, hadoop_fs, write_batch
 
 from pandas_db_spark.functions.text import tokens
 
@@ -168,16 +168,15 @@ def _drop_table_and_location(spark, table_name: str) -> None:
     previous session's warehouse directory persists while the new
     catalog has no entry for it, so ``saveAsTable`` refuses the location.
 
-    Safety contract (r8, per ADVICE r7): a REGISTERED table is removed
-    only through ``DROP TABLE`` — the catalog deletes the table's real
-    location, wherever it is; we never guess a path for it.  The
-    filesystem delete runs only when the table is ABSENT from the
-    catalog, and only against the default-database managed location
-    ``<warehouse>/<name>`` — the one ``saveAsTable`` would claim next.
-    Qualified names (``db.tbl`` lives at ``<warehouse>/db.db/tbl``) are
-    rejected rather than mapped to the wrong directory.  Uses the Hadoop
-    FileSystem API, so it works identically on local / HDFS / S3A
-    warehouses."""
+    Safety contract: a REGISTERED table is removed only through ``DROP
+    TABLE`` — the catalog deletes the table's real location, wherever it
+    is; we never guess a path for it.  The filesystem delete runs only
+    when the table is ABSENT from the catalog, and only against the
+    default-database managed location ``<warehouse>/<name>`` — the one
+    ``saveAsTable`` would claim next.  Qualified names (``db.tbl`` lives
+    at ``<warehouse>/db.db/tbl``) are rejected rather than mapped to the
+    wrong directory.  Uses the Hadoop FileSystem API, so it works
+    identically on local / HDFS / S3A warehouses."""
     if "." in table_name:
         raise ValueError(
             "_drop_table_and_location supports only unqualified "
@@ -189,11 +188,9 @@ def _drop_table_and_location(spark, table_name: str) -> None:
         # surface that through saveAsTable's own error, don't touch disk.
         return
     try:
-        jvm = spark._jvm
-        jsc = spark._jsc
         warehouse = spark.conf.get("spark.sql.warehouse.dir")
-        path = jvm.org.apache.hadoop.fs.Path(warehouse, table_name.lower())
-        fs = path.getFileSystem(jsc.hadoopConfiguration())
+        fs, P = hadoop_fs(spark, warehouse)
+        path = P(warehouse, table_name.lower())
         if fs.exists(path):
             fs.delete(path, True)
     except Exception:
@@ -352,23 +349,13 @@ def compact_bm25_stream_index(spark, index_dir: str,
     ``batch_id=-1`` partition, meta rows fold to a single file under
     the same partition — content is row-identical, only the layout
     changes, and serving's integer meta sums are unaffected.  The same
-    contract, machinery (Hadoop FS staging swap, crash rollback), and
-    streaming-layout rules as ``similarity.compact_index``: run
-    OFFLINE, keep the checkpoint, pass ``checkpoint_dir`` to refuse
-    compaction while a batch is started-but-uncommitted."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    folded = _compact_partitioned_dataset(spark, index_dir, "postings",
-                                          "tbucket")
-    if folded is not None:
-        report["postings"] = folded
-    folded = _compact_partitioned_dataset(spark, index_dir, "meta",
-                                          None, coalesce_one=True)
-    if folded is not None:
-        report["meta"] = folded
+    contract, staged swap, crash rollback and streaming-layout rules as
+    ``similarity.compact_index`` (both fold through
+    ``streaming.sink.compact``): run OFFLINE, keep the checkpoint, pass
+    ``checkpoint_dir`` to refuse compaction while a batch is
+    started-but-uncommitted."""
+    report = compact(spark, index_dir,
+                     {"postings": "tbucket", "meta": None}, checkpoint_dir)
     if "postings" not in report:
         raise ValueError(f"{index_dir} holds no /postings dataset — "
                          "not a streaming BM25 index directory")

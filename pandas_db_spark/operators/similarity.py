@@ -31,6 +31,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_db_spark.session import tiny_df
+from pandas_db_spark.streaming.sink import (compact, dedup_rewrite,
+                                            recover_staged,
+                                            staged_overwrite)
 
 # Bump whenever quantizer-fit / index-layout code changes so callers that
 # cache built indexes on disk (queries.ann_ivfpq_recall's tmp-dir memo)
@@ -301,78 +304,6 @@ def signlsh_store(emb: DataFrame, id_col: str = "vec_id",
     return _sign_bands(emb, id_col, vec_col, dim, bands, rows, seed)
 
 
-def _fs_for(spark, path: str):
-    jvm = spark._jvm
-    P = jvm.org.apache.hadoop.fs.Path
-    fs = P(path).getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, P
-
-
-def recover_staged(spark, path: str) -> bool:
-    """Roll a crashed :func:`_staged_overwrite` swap forward/back so the
-    live directory exists again.  A crash between the two renames leaves
-    the data only in ``.__stage_old`` (and possibly a complete
-    ``.__stage_tmp``); readers of the live path would otherwise see
-    PATH_NOT_FOUND — which the ingest's ``_read_store`` deliberately
-    treats as "first batch ever", i.e. a SILENTLY EMPTY dedup store.
-    Called by :func:`reband_store` / the compactors before reading, and
-    safe to call any time (no-op when the live dir exists).  Returns
-    True when a recovery was performed."""
-    base = path.rstrip("/")
-    fs, P = _fs_for(spark, base)
-    if fs.exists(P(base)):
-        return False
-    old, tmp = base + ".__stage_old", base + ".__stage_tmp"
-    if fs.exists(P(old)):
-        # roll BACK to the pre-swap state (tmp may be incomplete; old is
-        # by construction the complete previous live copy)
-        if not fs.rename(P(old), P(base)):
-            raise IOError(f"recover_staged: rename {old} -> {base} failed")
-        if fs.exists(P(tmp)):
-            fs.delete(P(tmp), True)
-        return True
-    return False
-
-
-def _staged_overwrite(df: DataFrame, path: str,
-                      partition_by: str | None = None,
-                      n_files: int = 8) -> None:
-    """Rewrite a parquet directory THAT THE PLAN READS FROM: write to a
-    sibling tmp dir, then swap via two Hadoop FS renames (old → .old,
-    tmp → live, delete .old).  A direct ``mode("overwrite")`` truncates
-    the directory the lazy read still points at.  Every rename's boolean
-    result is CHECKED (Hadoop rename reports failure by returning false,
-    e.g. renaming into an existing destination) — the old copy is
-    deleted only after the new one is verifiably live.  A crash mid-swap
-    leaves the previous copy in ``.__stage_old``; :func:`recover_staged`
-    rolls it back, and the r9 callers invoke it before reading."""
-    spark = df.sparkSession
-    base = path.rstrip("/")
-    tmp, old = base + ".__stage_tmp", base + ".__stage_old"
-    if partition_by:
-        w = (df.repartition(n_files, partition_by)
-               .write.mode("overwrite").partitionBy(partition_by))
-    else:
-        w = df.coalesce(n_files).write.mode("overwrite")
-    w.parquet(tmp)
-    fs, P = _fs_for(spark, base)
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if fs.exists(P(base)):
-        if not fs.rename(P(base), P(old)):
-            raise IOError(
-                f"_staged_overwrite: rename {base} -> {old} failed; "
-                f"live data untouched, new data left in {tmp}")
-    if not fs.rename(P(tmp), P(base)):
-        # put the old copy back before failing — never leave the live
-        # path missing with the data stranded in a stage sibling
-        fs.rename(P(old), P(base))
-        raise IOError(
-            f"_staged_overwrite: rename {tmp} -> {base} failed; "
-            "previous data restored")
-    fs.delete(P(old), True)
-
-
 def reband_store(spark, store_dir: str, threshold: float = 0.95,
                  bands="auto", rows="auto", id_col: str = "vec_id",
                  vec_col: str = "embedding", dim: int = 64,
@@ -396,11 +327,12 @@ def reband_store(spark, store_dir: str, threshold: float = 0.95,
 
     Offline maintenance contract: run between ingest runs, not under a
     live stream.  Every rewrite is staged (the previous copy survives a
-    crash in a ``.__stage_old`` sibling and :func:`recover_staged` rolls
-    it back — invoked here on entry, so re-running after any crash
-    completes the migration); meta is re-pinned only AFTER the keys
-    land, and a crash between the two leaves keys/meta mismatched —
-    re-run to completion, the operation is idempotent.  Returns the new
+    crash in a ``.__stage_old`` sibling and
+    ``streaming.sink.recover_staged`` rolls it back — invoked here on
+    entry, so re-running after any crash completes the migration); meta
+    is re-pinned only AFTER the keys land, and a crash between the two
+    leaves keys/meta mismatched — re-run to completion, the operation is
+    idempotent.  Returns the new
     ``(bands, rows)``."""
     for sub in ("/vecs", "/keys", "/meta"):
         recover_staged(spark, store_dir + sub)
@@ -418,20 +350,20 @@ def reband_store(spark, store_dir: str, threshold: float = 0.95,
             # to its own (typically much larger) default and never warn
             expected_corpus = n
     keys = _sign_bands(vecs, id_col, vec_col, dim, bands, rows, seed)
-    part = None
+    part = ()
     if "batch_id" in vecs.columns:
         # preserve the ingest's batch partitioning so later replayed /
         # new batches keep their idempotent per-partition overwrites
         keys = keys.join(
             vecs.select(F.col(id_col).alias("id"), "batch_id"), "id")
-        part = "batch_id"
-    _staged_overwrite(keys, store_dir + "/keys", partition_by=part)
+        part = ("batch_id",)
+    staged_overwrite(keys, store_dir + "/keys", part, n_files=8)
     meta = [(int(bands), int(rows),
              int(expected_corpus) if expected_corpus is not None else None)]
     # staged as well: a plain overwrite that crashes mid-write leaves an
     # EMPTY meta, which a later ingest would mistake for "first batch
     # ever" and re-pin a geometry that no longer matches the keys
-    _staged_overwrite(
+    staged_overwrite(
         tiny_df(spark, meta,
                 "bands long, rows long, expected_corpus long"),
         store_dir + "/meta", n_files=1)
@@ -449,19 +381,8 @@ def compact_signlsh_store(spark, store_dir: str, id_col: str = "vec_id",
     per-batch overwrites cannot touch the compacted rows); unpartitioned
     stores stay unpartitioned.  Same offline contract and staged-swap
     crash safety as :func:`reband_store`."""
-    for sub, dedup_cols in (("/keys", ["id", "band", "bh"]),
-                            ("/vecs", [id_col])):
-        recover_staged(spark, store_dir + sub)
-        df = spark.read.parquet(store_dir + sub)
-        part = None
-        if "batch_id" in df.columns:
-            df = (df.dropDuplicates(dedup_cols)
-                    .withColumn("batch_id", F.lit(-1)))
-            part = "batch_id"
-        else:
-            df = df.dropDuplicates(dedup_cols)
-        _staged_overwrite(df, store_dir + sub, partition_by=part,
-                          n_files=n_files)
+    dedup_rewrite(spark, store_dir + "/keys", ["id", "band", "bh"], n_files)
+    dedup_rewrite(spark, store_dir + "/vecs", [id_col], n_files)
 
 
 def cosine_incremental(new_emb: DataFrame, store_emb: DataFrame,
@@ -1485,8 +1406,8 @@ def append_ivf_index(emb_new: DataFrame, path: str,
     the corpus outgrows the built geometry (~2-4x the build size),
     rebuild with a larger ``nlist`` (the IVF analogue of the sign-LSH
     ``reband_store`` migration).  Compaction note: each append adds one
-    file per touched partition; fold small files with an offline
-    read-repartition-overwrite when file counts matter."""
+    file per touched partition; fold them offline with
+    :func:`compact_index` when file counts matter."""
     spark = emb_new.sparkSession
     cent = _read_pinned_centroids(spark, path)
     existing = spark.read.parquet(path + "/vectors")
@@ -1542,47 +1463,6 @@ def append_ivfpq_index(emb_new: DataFrame, path: str,
           .parquet(path + "/vectors"))
 
 
-def _count_parquet_files(fs, P, src: str) -> int:
-    it = fs.listFiles(P(src), True)
-    n = 0
-    while it.hasNext():
-        if it.next().getPath().getName().endswith(".parquet"):
-            n += 1
-    return n
-
-
-def _assert_stream_quiesced(spark, checkpoint_dir: str) -> None:
-    """Raise unless the Structured Streaming checkpoint shows every
-    started micro-batch COMMITTED (max offsets == max commits).  An
-    uncommitted batch means a crash mid-batch left a PARTIAL
-    ``batch_id=N`` partition that the resumed stream will rewrite —
-    compacting it away first would make the replay a double-append."""
-    fs, P = _fs_for(spark, checkpoint_dir)
-    base = checkpoint_dir.rstrip("/")
-
-    def newest(sub: str) -> int | None:
-        d = base + "/" + sub
-        if not fs.exists(P(d)):
-            return None
-        best = None
-        for st in fs.listStatus(P(d)):
-            nm = st.getPath().getName()
-            if nm.isdigit():
-                v = int(nm)
-                best = v if best is None else max(best, v)
-        return best
-
-    off, com = newest("offsets"), newest("commits")
-    if off is not None and off != com:
-        raise ValueError(
-            f"compact_index: checkpoint {checkpoint_dir} shows batch "
-            f"{off} started but not committed (last commit: {com}) — "
-            "the stream is not quiesced.  Run the ingest once more "
-            "(availableNow drains and commits the replay) before "
-            "compacting, or the resumed stream would double-append "
-            "the partial batch")
-
-
 def compact_index(spark, path: str, checkpoint_dir: str | None = None
                   ) -> dict:
     """Fold append-fragmented index partitions: each
@@ -1593,11 +1473,10 @@ def compact_index(spark, path: str, checkpoint_dir: str | None = None
     IVF-PQ index) at ONE file per list partition — ``repartition`` on
     the ``list_id`` hash routes each list to a single task, so lists
     compact in parallel and each task writes exactly its list's file —
-    via a staging directory + directory swap through the Hadoop
-    ``FileSystem`` API (the same ``_fs_for`` path every store swap in
-    this module uses), so the fold runs on whatever filesystem the
-    index actually lives on — HDFS/S3A included, not just the driver's
-    local disk.  Run OFFLINE between ingest runs, the same contract as
+    via ``streaming.sink.compact``, whose staged swap goes through the
+    Hadoop ``FileSystem`` API, so the fold runs on whatever filesystem
+    the index actually lives on — HDFS/S3A included, not just the
+    driver's local disk.  Run OFFLINE between ingest runs, the same contract as
     ``reband_store``/``compact_signlsh_store``.  Content is untouched —
     rows, assignments and codes are byte-identical, only the file
     layout changes — so every serving plan (partition pruning included)
@@ -1618,81 +1497,15 @@ def compact_index(spark, path: str, checkpoint_dir: str | None = None
     to run while the checkpoint shows a started-but-uncommitted batch,
     whose partial partition the resumed stream must rewrite.
 
-    A crash mid-swap leaves the previous copy in ``_{sub}_old``; the
-    next call rolls it back before compacting (the
-    :func:`recover_staged` discipline).  Returns per-dataset file
-    counts before/after and the detected layout for the caller's
-    log."""
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    for sub in ("vectors", "codes"):
-        folded = _compact_partitioned_dataset(spark, path, sub, "list_id")
-        if folded is not None:
-            report[sub] = folded
+    A crash mid-swap leaves the previous copy in the
+    ``<dataset>.__stage_old`` sibling; the next call rolls it back
+    before compacting (``streaming.sink.recover_staged``).  Returns
+    per-dataset file counts before/after and the detected layout for
+    the caller's log."""
+    report = compact(spark, path,
+                     {"vectors": "list_id", "codes": "list_id"},
+                     checkpoint_dir)
     if not report:
         raise ValueError(f"{path} holds no /vectors or /codes dataset")
     return report
 
-
-def _compact_partitioned_dataset(spark, path: str, sub: str,
-                                 part_col: str,
-                                 coalesce_one: bool = False
-                                 ) -> dict | None:
-    """The shared fold behind :func:`compact_index` and the streaming
-    BM25 compactor: rewrite ``{path}/{sub}`` at one file per
-    ``part_col`` partition (``repartition`` on the column hash routes
-    each partition to a single task), detecting and KEEPING a
-    streaming ``batch_id=N/{part_col}=M`` two-level layout by folding
-    into the reserved ``batch_id=-1`` partition.  Hadoop FS staging
-    swap with checked renames, rollback on a failed second rename, and
-    crash recovery from a leftover ``_old`` directory.  Returns None
-    when the dataset does not exist; ``coalesce_one`` folds to a single
-    file with no partition column (per-batch meta rows)."""
-    base = path.rstrip("/")
-    fs, P = _fs_for(spark, base)
-    src = base + "/" + sub.strip("/")
-    flat = sub.strip("/").replace("/", "_")
-    old = base + f"/_{flat}_old"
-    # roll back a crashed previous swap: data is only in _old
-    if not fs.exists(P(src)) and fs.exists(P(old)):
-        if not fs.rename(P(old), P(src)):
-            raise IOError(f"compact: recovery rename "
-                          f"{old} -> {src} failed")
-    if not fs.exists(P(src)):
-        return None
-    streaming = any(
-        st.isDirectory()
-        and st.getPath().getName().startswith("batch_id=")
-        for st in fs.listStatus(P(src)))
-    before = _count_parquet_files(fs, P, src)
-    df = spark.read.parquet(src)
-    stage = base + f"/_{flat}_compact_tmp"
-    if fs.exists(P(stage)):
-        fs.delete(P(stage), True)
-    if coalesce_one:
-        w = df
-        if streaming:
-            w = w.withColumn("batch_id", F.lit(-1))
-        (w.coalesce(1).write.mode("overwrite")
-          .partitionBy(*(["batch_id"] if streaming else []))
-          .parquet(stage))
-    else:
-        parts = [part_col]
-        if streaming:
-            df = df.withColumn("batch_id", F.lit(-1))
-            parts = ["batch_id", part_col]
-        (df.repartition(F.col(part_col))
-           .write.mode("overwrite").partitionBy(*parts).parquet(stage))
-    if fs.exists(P(old)):
-        fs.delete(P(old), True)
-    if not fs.rename(P(src), P(old)):
-        raise IOError(f"compact: rename {src} -> {old} failed")
-    if not fs.rename(P(stage), P(src)):
-        fs.rename(P(old), P(src))   # roll back, old copy still live
-        raise IOError(f"compact: rename {stage} -> {src} "
-                      "failed; previous layout restored")
-    fs.delete(P(old), True)
-    return {"files_before": before,
-            "files_after": _count_parquet_files(fs, P, src),
-            "layout": "streaming" if streaming else "batch"}

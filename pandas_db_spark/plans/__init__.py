@@ -1,7 +1,7 @@
 """Plan-level helpers: ordinal synthesis for positional access, and explain
 introspection used by the perf tests."""
 
-from pandas_db_spark.plans.ordinal import with_ordinal, ORDINAL_COL
+from pandas_db_spark.plans.ordinal import ORDINAL_COL
 from pandas_db_spark.plans.explain import (
     formatted_plan,
     pushed_filters,
@@ -11,7 +11,6 @@ from pandas_db_spark.plans.explain import (
 )
 
 __all__ = [
-    "with_ordinal",
     "ORDINAL_COL",
     "formatted_plan",
     "pushed_filters",

@@ -109,10 +109,3 @@ def with_ordinal_and_count(df: DataFrame) -> tuple[DataFrame, int]:
                 pass
     return out, running
 
-
-def with_ordinal(df: DataFrame, zero_based: bool = True) -> DataFrame:
-    """Back-compat wrapper: just the ordinal-attached frame."""
-    out, _ = with_ordinal_and_count(df)
-    if not zero_based:
-        out = out.withColumn(ORDINAL_COL, F.col(ORDINAL_COL) + 1)
-    return out

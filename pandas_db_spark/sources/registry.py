@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pandas_db_spark.exceptions import FileTypeError
+from pandas_db_spark.streaming.sink import hadoop_fs
 from pandas_db_spark.utils import normalize_col
 
 SUPPORTED_FILE_EXTENSIONS = (".sql", ".db", ".sqlite", ".sqlite3")
@@ -451,10 +452,8 @@ def compact_parquet(spark, path: str, out_path: str,
         raise ValueError(
             "compact_parquet: out_path must differ from path "
             "(overwriting a directory while reading it is undefined)")
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total = fs.getContentSummary(hpath).getLength()
+    fs, P = hadoop_fs(spark, path)
+    total = fs.getContentSummary(P(path)).getLength()
     n = max(1, -(-int(total) // (target_mb << 20)))
     df = read_parquet(spark, path)
     df.repartition(n).write.mode("overwrite").parquet(out_path)
@@ -469,15 +468,13 @@ def _hadoop_isdir(spark: SparkSession, path: str) -> bool:
     a nonexistent path is False, but any OTHER remote-FS error
     propagates — swallowing a transient RPC failure here would route a
     directory dataset to the filename-glob branch and silently stream
-    zero rows, the exact r8 bug this function exists to prevent."""
+    zero rows."""
     try:
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(path)
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+        fs, P = hadoop_fs(spark, path)
     except AttributeError:
         return os.path.isdir(path)  # no JVM gateway (mocked session)
     try:
-        return bool(fs.getFileStatus(jpath).isDirectory())
+        return bool(fs.getFileStatus(P(path)).isDirectory())
     except Exception as exc:
         if "FileNotFoundException" in type(exc).__name__ + str(exc):
             return False

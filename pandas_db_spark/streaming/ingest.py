@@ -44,7 +44,9 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, functions as F
 
 from pandas_db_spark.session import tiny_df
-from pandas_db_spark.streaming.sink import drain_batches, write_batch
+from pandas_db_spark.streaming.sink import (assert_not_mid_swap,
+                                            drain_batches,
+                                            is_path_not_found, write_batch)
 
 
 def _read_store(spark, path: str, schema: str) -> DataFrame:
@@ -54,30 +56,14 @@ def _read_store(spark, path: str, schema: str) -> DataFrame:
     every previously-seen document into the corpus.  A missing path whose
     ``.__stage_old`` sibling EXISTS is an interrupted staged rewrite
     (reband/compact crashed between renames), not a first batch: raise and
-    name the recovery instead of silently emptying the store (r9)."""
+    name the recovery instead of silently emptying the store."""
     try:
         return spark.read.parquet(path)
     except AnalysisException as exc:
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if (cond and "PATH_NOT_FOUND" in cond) or \
-                "Path does not exist" in str(exc):
-            try:
-                from pandas_db_spark.operators.similarity import _fs_for
-                fs, P = _fs_for(spark, path)
-                stale = fs.exists(P(path.rstrip("/") + ".__stage_old"))
-            except Exception:
-                stale = False
-            if stale:
-                raise RuntimeError(
-                    f"dedup store table {path} is missing but its "
-                    ".__stage_old sibling exists — a staged rewrite "
-                    "(reband_store / compaction) crashed mid-swap.  Run "
-                    "operators.similarity.recover_staged(spark, path) "
-                    "(or re-run the migration) before ingesting; "
-                    "treating this as an empty store would re-admit "
-                    "every previously-seen document.") from exc
-            return spark.createDataFrame([], schema)
-        raise
+        if not is_path_not_found(exc):
+            raise
+        assert_not_mid_swap(spark, path)
+        return spark.createDataFrame([], schema)
 
 
 def run_dedup_ingest(stream_df: DataFrame, text_col: str, id_col: str,
@@ -449,10 +435,11 @@ def run_ivf_index_ingest(stream_df: DataFrame, index_dir: str,
     Serving prunes on ``list_id`` across every batch directory —
     partition filters apply to any partition column regardless of
     nesting — and :func:`operators.similarity.compact_index` is the
-    offline fold for file-count growth: it detects this two-level
-    layout and folds everything into the reserved ``batch_id=-1``
-    partition (real batch ids are non-negative, so a resumed stream
-    composes cleanly and partition depths never mix); pass this
+    offline fold for file-count growth: through
+    ``streaming.sink.compact`` it keeps this two-level layout and folds
+    everything into the reserved ``batch_id=-1`` partition (real batch
+    ids are non-negative, so a resumed stream composes cleanly and
+    partition depths never mix); pass this
     stream's ``checkpoint_dir`` so compaction verifies the stream is
     quiesced first.  KEEP the checkpoint across compaction — resetting
     it replays the source into a corpus the compacted partition already

@@ -45,7 +45,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from pandas_db_spark.operators.stats import drift_from_counts, term_counts
-from pandas_db_spark.streaming.sink import drain_batches, write_batch
+from pandas_db_spark.streaming.sink import (assert_quiesced, compact,
+                                            drain_batches, hadoop_fs,
+                                            is_path_not_found, write_batch)
 
 from pandas_db_spark.session import tiny_df as _tiny_df
 
@@ -77,9 +79,7 @@ def _reference_counts(spark: SparkSession, monitor_dir: str,
         # ONLY path-not-found means "first run"; a corrupted reference
         # or IO error must propagate — silently refitting would change
         # the series' meaning (the _read_store discipline)
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if not ((cond and "PATH_NOT_FOUND" in cond)
-                or "Path does not exist" in str(exc)):
+        if not is_path_not_found(exc):
             raise
     if reference_df is None:
         raise ValueError(
@@ -199,23 +199,13 @@ def compact_drift_counts(spark: SparkSession, monitor_dir: str,
     row-identically under the reserved ``batch_id=-1`` partition at one
     file each — the cumulative fold's ``batch_id <= N`` filter keeps
     including them (−1 ≤ anything), so a resumed stream composes and
-    later replays of POST-compaction batches stay idempotent.  Same
-    contract, machinery (Hadoop FS staging swap, crash rollback) and
-    rules as the index compactors: run OFFLINE, keep the checkpoint,
-    pass ``checkpoint_dir`` to refuse while a batch is
+    later replays of POST-compaction batches stay idempotent.  The fold
+    is ``streaming.sink.compact`` (staged swap, crash rollback), shared
+    with the index compactors, and so are the rules: run OFFLINE, keep
+    the checkpoint, pass ``checkpoint_dir`` to refuse while a batch is
     started-but-uncommitted."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    for sub in ("counts", "drift"):
-        folded = _compact_partitioned_dataset(spark, monitor_dir, sub,
-                                              part_col="",
-                                              coalesce_one=True)
-        if folded is not None:
-            report[sub] = folded
-    return report
+    return compact(spark, monitor_dir, {"counts": None, "drift": None},
+                   checkpoint_dir)
 
 
 def drift_alert(spark: SparkSession, monitor_dir: str,
@@ -299,25 +289,24 @@ def _read_hh_state(spark: SparkSession, store_dir: str,
                 .where(F.col("batch_id") < before_batch))
         row = meta.orderBy(F.col("batch_id").desc()).limit(1).collect()
     except AnalysisException as exc:
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if not ((cond and "PATH_NOT_FOUND" in cond)
-                or "Path does not exist" in str(exc)):
+        if not is_path_not_found(exc):
             raise
         return None, 0, 0
     if not row:
         return None, 0, 0
     prev_id = int(row[0]["batch_id"])
     prev_n, prev_err = int(row[0]["n_tokens"]), int(row[0]["err_ub"])
-    # Integrity receipt (ADVICE r13): hhmeta records how many rows its
-    # batch's summary held (n_rows, r14), so a prev partition that reads
+    # Integrity receipt: hhmeta records how many rows its batch's
+    # summary held (n_rows), so a prev partition that reads
     # back SHORT means the summary was pruned/lost out of band — folding
     # an EMPTY/partial previous state would silently restart the
     # estimates while the meta ledger keeps accumulating: a wrong answer
     # with no error.  A legitimately empty summary (every merged row
     # tied at the trim threshold — valid MG state) has n_rows=0 recorded
     # and is served without touching summary/ (whose batch_id=prev
-    # partition was never written).  Pre-r14 stores lack the column and
-    # skip the check rather than refuse to load.
+    # partition was never written).  Stores written before n_rows
+    # existed lack the column and skip the check rather than refuse to
+    # load.
     expect = (int(row[0]["n_rows"])
               if "n_rows" in [f.name for f in meta.schema.fields]
               and row[0]["n_rows"] is not None else None)
@@ -723,18 +712,8 @@ def compact_kmv_store(spark: SparkSession, store_dir: str,
     size-reducing fold to ONE bottom-k partition is also sound —
     serving is a bottom-k over the union — but would rewrite the
     ledger; the in-place fold keeps every receipt intact.)"""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    for sub in ("kmv", "kmvmeta"):
-        folded = _compact_partitioned_dataset(spark, store_dir, sub,
-                                              part_col="",
-                                              coalesce_one=True)
-        if folded is not None:
-            report[sub] = folded
-    return report
+    return compact(spark, store_dir, {"kmv": None, "kmvmeta": None},
+                   checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -782,9 +761,7 @@ def append_histogram_batch(batch_df: DataFrame, batch_id: int,
                 "the bins are the store's schema; build a new store to "
                 "change them")
     except AnalysisException as exc:
-        cond = exc.getCondition() if hasattr(exc, "getCondition") else None
-        if not ((cond and "PATH_NOT_FOUND" in cond)
-                or "Path does not exist" in str(exc)):
+        if not is_path_not_found(exc):
             raise
         _tiny_df(
             spark, [(float(lo), float(hi), int(n_bins))],
@@ -1098,18 +1075,8 @@ def compact_quantile_store(spark: SparkSession, store_dir: str,
     row-identically into the reserved ``batch_id=-1`` partition — the
     serve path folds ALL rows, so the fold changes nothing it reads
     (the compact_sketch_store contract; quiesce rule identical)."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    for sub in ("qsummary", "qmeta"):
-        folded = _compact_partitioned_dataset(spark, store_dir, sub,
-                                              part_col="",
-                                              coalesce_one=True)
-        if folded is not None:
-            report[sub] = folded
-    return report
+    return compact(spark, store_dir, {"qsummary": None, "qmeta": None},
+                   checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
@@ -1325,18 +1292,8 @@ def compact_grouped_quantile_store(spark: SparkSession, store_dir: str,
                                    ) -> dict:
     """Row-identical fragmentation fold for the grouped store — the
     compact_quantile_store contract over ``gqsummary``/``gqmeta``."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = {}
-    for sub in ("gqsummary", "gqmeta"):
-        folded = _compact_partitioned_dataset(spark, store_dir, sub,
-                                              part_col="",
-                                              coalesce_one=True)
-        if folded is not None:
-            report[sub] = folded
-    return report
+    return compact(spark, store_dir, {"gqsummary": None, "gqmeta": None},
+                   checkpoint_dir)
 
 
 def compact_histogram_store(spark: SparkSession, store_dir: str,
@@ -1346,26 +1303,19 @@ def compact_histogram_store(spark: SparkSession, store_dir: str,
     identically into the reserved ``batch_id=-1`` partition — the serve
     path (histogram_quantile_bounds) groups over ALL rows, so the fold
     is serve-identical by construction; ``geometry/`` is already a
-    single file and is left alone (VERDICT r13 Next #7 — the store had
-    no lifecycle story; per-batch files otherwise fragment forever).
-    Quiesce rule identical to every compactor: run OFFLINE, keep the
-    streaming checkpoint, pass ``checkpoint_dir`` to refuse while a
-    batch is started-but-uncommitted."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = _compact_partitioned_dataset(spark, store_dir, "hist",
-                                          part_col="",
-                                          coalesce_one=True)
-    return {"hist": report} if report is not None else {}
+    single file and is left alone.  Quiesce rule identical to every
+    compactor: run OFFLINE, keep the streaming checkpoint, pass
+    ``checkpoint_dir`` to refuse while a batch is
+    started-but-uncommitted."""
+    return compact(spark, store_dir, {"hist": None}, checkpoint_dir)
 
 
 # ---------------------------------------------------------------------------
-# Store lifecycle for the r13 monitors — same contract family as
-# compact_drift_counts / compact_index: run OFFLINE, keep the streaming
-# checkpoint, pass checkpoint_dir to refuse while a batch is
-# started-but-uncommitted.  Two shapes, matched to each store's read path:
+# Store lifecycle for the heavy-hitter and sketch monitors — same
+# contract family as compact_drift_counts / compact_index: run OFFLINE,
+# keep the streaming checkpoint, pass checkpoint_dir to refuse while a
+# batch is started-but-uncommitted.  Two shapes, matched to each store's
+# read path:
 #
 # * the HH store SERVES from the latest batch partition only, so old
 #   partitions PRUNE (replay determinism needs the immediately-previous
@@ -1389,16 +1339,14 @@ def prune_heavy_hitter_store(spark: SparkSession, store_dir: str,
         raise ValueError(
             f"keep_last must be >= 2 (serving reads the latest "
             f"partition, a replay of batch N reads N-1), got {keep_last}")
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _fs_for)
     if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    fs, P = _fs_for(spark, store_dir)
+        assert_quiesced(spark, checkpoint_dir)
+    fs, P = hadoop_fs(spark, store_dir)
     # A half-written store (exactly one of summary/ and hhmeta/ present)
-    # must surface, not be reported as empty (ADVICE r13): the pair is
-    # written together by every append, so a lone survivor means the
-    # other was deleted out of band and the guarantee ledger no longer
-    # matches its summaries.
+    # must surface, not be reported as empty: the pair is written
+    # together by every append, so a lone survivor means the other was
+    # deleted out of band and the guarantee ledger no longer matches
+    # its summaries.
     present = {sub: fs.exists(P(store_dir.rstrip("/") + "/" + sub))
                for sub in ("summary", "hhmeta")}
     if present["summary"] != present["hhmeta"]:
@@ -1439,11 +1387,4 @@ def compact_sketch_store(spark: SparkSession, store_dir: str,
     non-negative batch ids beside it and composes (the
     compact_drift_counts contract; replays of PRE-compaction batch ids
     are forbidden by the quiesce rule, same as there)."""
-    from pandas_db_spark.operators.similarity import (
-        _assert_stream_quiesced, _compact_partitioned_dataset)
-    if checkpoint_dir is not None:
-        _assert_stream_quiesced(spark, checkpoint_dir)
-    report = _compact_partitioned_dataset(spark, store_dir, "sketches",
-                                          part_col="",
-                                          coalesce_one=True)
-    return {"sketches": report} if report is not None else {}
+    return compact(spark, store_dir, {"sketches": None}, checkpoint_dir)

@@ -1551,12 +1551,13 @@ def test_cosine_pairs_ivf_empty_input(spark):
 
 
 def test_recover_staged_rolls_back(spark, emb, tmp_path):
-    """r9 review: a crash between _staged_overwrite's two renames leaves
+    """r9 review: a crash between staged_overwrite's two renames leaves
     the live dir missing and the previous copy in .__stage_old;
     recover_staged must restore it, and reband_store must self-recover
     on entry."""
     import os
     import shutil
+    from pandas_db_spark.streaming.sink import recover_staged
     store_dir = str(tmp_path / "store")
     e = emb.select("vec_id", "embedding").where(F.col("vec_id") < 30)
     e.write.parquet(store_dir + "/vecs")
@@ -1566,7 +1567,7 @@ def test_recover_staged_rolls_back(spark, emb, tmp_path):
      .write.parquet(store_dir + "/meta"))
     # simulate the mid-swap crash: live keys renamed away, tmp gone
     os.rename(store_dir + "/keys", store_dir + "/keys.__stage_old")
-    assert S.recover_staged(spark, store_dir + "/keys")
+    assert recover_staged(spark, store_dir + "/keys")
     assert spark.read.parquet(store_dir + "/keys").count() == 30 * 4
     # and reband_store recovers by itself when entered mid-crash
     os.rename(store_dir + "/keys", store_dir + "/keys.__stage_old")

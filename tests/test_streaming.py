@@ -770,6 +770,10 @@ def test_compact_dedup_store_exact_and_near(spark, tmp_path):
     assert spark.read.parquet(near_dir + "/sigs").count() == 20
     assert spark.read.parquet(near_dir + "/docs").count() == 20
     assert "batch_id" not in spark.read.parquet(near_dir + "/sigs").columns
+    # a swap interrupted between its renames: the re-run recovers first
+    os.rename(near_dir + "/sigs", near_dir + "/sigs.__stage_old")
+    compact_dedup_store(spark, near_dir, mode="near")
+    assert spark.read.parquet(near_dir + "/sigs").count() == 20
 
     with pytest.raises(ValueError, match="unknown mode"):
         compact_dedup_store(spark, near_dir, mode="embedding")
@@ -843,8 +847,8 @@ def test_embedding_ingest_crash_compact_migrate_end_to_end(spark,
     against the recovered+compacted+rebanded store.  The survivor set
     must equal an uninterrupted run's."""
     import shutil
-    from pandas_db_spark.operators.similarity import (
-        compact_signlsh_store, recover_staged)
+    from pandas_db_spark.operators.similarity import compact_signlsh_store
+    from pandas_db_spark.streaming.sink import recover_staged
     from pandas_db_spark.streaming.ingest import run_dedup_ingest
 
     def vec(i, dim=64):
@@ -2035,6 +2039,17 @@ def test_heavy_hitter_prune_and_sketch_compaction(spark, tmp_path):
     est0 = tuple(distinct_estimate(spark, sk).collect()[0])
     rep = compact_sketch_store(spark, sk)
     assert rep["sketches"]["files_after"] <= rep["sketches"]["files_before"]
+    assert tuple(distinct_estimate(spark, sk).collect()[0]) == est0
+    # a swap interrupted between its renames: a resumed batch must not
+    # start a new store beside the parked copy, and the next compaction
+    # rolls the parked copy back
+    import os
+    os.rename(sk + "/sketches", sk + "/sketches.__stage_old")
+    with _pt.raises(RuntimeError, match="recover_staged"):
+        append_distinct_sketch_batch(
+            spark.createDataFrame([(999, "brandnew tokens here")],
+                                  "doc_id long, text string"), 3, sk)
+    compact_sketch_store(spark, sk)
     assert tuple(distinct_estimate(spark, sk).collect()[0]) == est0
     # a resumed batch lands beside the folded partition and composes
     append_distinct_sketch_batch(
