@@ -54,30 +54,21 @@ class Database:
             self._populate_cache_async()
 
     # -- registry ---------------------------------------------------------
-    # mtime ticks this close to "now" may hide a same-tick change on
-    # coarse-granularity filesystems → fall back to comparing dir entries.
-    _STAMP_GRACE_S = 2.0
-
     def _source_stamp(self):
-        """Cheap change detector for the source: the path's mtime — ONE
-        stat, no readdir, no parquet footer reads.  Only when the mtime is
-        within ``_STAMP_GRACE_S`` of now (the coarse-granularity risk
-        window where add-then-probe inside one tick could be missed) does
-        it also capture the sorted entry list; an old, unchanged mtime
-        alone proves the directory unchanged.  None (non-local / stat
-        failure) disables memoization → every miss re-lists, the
-        pre-round-5 behavior.  Known residual: files appearing INSIDE an
-        already-listed table directory don't change this stamp — matching
-        the reference, whose lazy binding is also a top-level listing
-        (connection.py:258-259)."""
+        """Cheap change detector for the source: its mtime plus, for a
+        directory, the sorted entry list — one stat and one readdir, no
+        parquet footer reads.  The entry list catches a table added in
+        the same mtime tick as the last listing on a coarse-granularity
+        filesystem.  None (stat failure) disables memoization, so every
+        miss re-lists.  Known residual: files appearing INSIDE an
+        already-listed table directory don't change this stamp —
+        matching the reference, whose lazy binding is also a top-level
+        listing (connection.py:258-259)."""
         import os
-        import time
         try:
-            mtime = os.path.getmtime(self._path)
-            if (time.time() - mtime < self._STAMP_GRACE_S
-                    and os.path.isdir(self._path)):
-                return (mtime, tuple(sorted(os.listdir(self._path))))
-            return (mtime, None)
+            entries = (tuple(sorted(os.listdir(self._path)))
+                       if os.path.isdir(self._path) else None)
+            return os.path.getmtime(self._path), entries
         except OSError:
             return None
 
@@ -90,44 +81,13 @@ class Database:
                 df.createOrReplaceTempView(name)
 
     def _maybe_refresh_registry(self) -> None:
-        """Re-list the source only if it changed since the last listing.
-        Round-4 verdict #3: a bare ``hasattr`` probe / autocomplete on a
-        missing name must not trigger a filesystem scan + parquet footer
-        reads every time.  Entry lists are only captured inside the
-        granularity grace window, so a (mtime, entries) vs (mtime, None)
-        pair with equal mtimes means "aged out of the window", not a
-        change."""
+        """Re-list the source only if it changed since the last listing,
+        so a bare ``hasattr`` probe / autocomplete on a missing name does
+        not trigger a filesystem scan + parquet footer reads every
+        time."""
         stamp = self._source_stamp()
-        prev = getattr(self, "_registry_stamp", None)
-        if stamp is None or prev is None:
+        if stamp is None or stamp != self._registry_stamp:
             self._refresh_registry()
-            return
-        if stamp[0] != prev[0]:
-            self._refresh_registry()
-            return
-        if (stamp[1] is not None and prev[1] is not None
-                and stamp[1] != prev[1]):
-            self._refresh_registry()
-            return
-        if stamp[1] is None and prev[1] is not None:
-            # ADVICE r5: the previous refresh captured entries inside the
-            # grace window; the fresh probe aged out of it (entries=None)
-            # with an EQUAL mtime.  A table added in the same coarse-fs
-            # mtime tick as that refresh would otherwise never be seen —
-            # one listdir resolves it (only on this rare transition, not
-            # on every probe).
-            import os
-            try:
-                entries = tuple(sorted(os.listdir(self._path)))
-            except OSError:
-                self._refresh_registry()
-                return
-            if entries != prev[1]:
-                self._refresh_registry()
-            else:
-                # Promote the verified entry list so later probes on the
-                # same tick compare entries, not (mtime, None).
-                self._registry_stamp = (prev[0], entries)
 
     @property
     def tables(self) -> list[str]:

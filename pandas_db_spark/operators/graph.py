@@ -21,12 +21,6 @@ counts.  Contrast with naive min-label propagation, whose round count is
 the graph DIAMETER: a pathological chain of chained near-dups (common in
 templated web text) makes that unbounded.
 
-Measured receipt (local[32], sf-independent): a 200,001-node PATH graph
-— maximal diameter, the adversarial case where naive label propagation
-needs 200k rounds — converges correctly (1 component) in ~45 s through
-the distributed rounds; the same topology at ≤ ``driver_threshold``
-edges answers in milliseconds via the union-find fast path.
-
 Lineage: each round's edge set is truncated through
 :func:`pandas_db_spark.plans.checkpoint.truncate_lineage`, which picks
 the checkpoint flavor from the session — without truncation the plan
@@ -36,8 +30,16 @@ checkpoint directory (``spark.sparkContext.setCheckpointDir`` on
 HDFS/S3A), every iterative operator in this module writes
 ``DataFrame.checkpoint`` files there, so an executor loss mid-iteration
 recomputes from the DFS instead of failing the job; without one
-(local[32] has no DFS) it falls back to eager ``localCheckpoint``, the
-honest default for a single machine.
+it falls back to eager ``localCheckpoint``, the honest default for a
+single machine.
+
+Shared shape: every operator prepares its edges through one null /
+self-loop filter (:func:`_edges`, :func:`_undirected`), runs fixed
+rounds through :func:`_rounds` and convergence loops through
+:func:`_fixpoint`, and reads every scalar it needs from a checkpointed
+frame (node counts, weight ranges, emptiness, convergence signatures)
+as an ``observe`` metric of that checkpoint's own job
+(:func:`_checkpoint_observed`) instead of a second pass.
 
 Reference scope note: the reference engine (pandas-db) has no graph
 operators — this is beyond-parity capability for the LLM-data-pipeline
@@ -47,12 +49,10 @@ layer, with semantics defined purely by the recursive-closure oracle in
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
-
-from pandas_db_spark.session import tiny_df
-
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from pandas_db_spark.plans.checkpoint import truncate_lineage
+from pandas_db_spark.session import tiny_df
 
 
 def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -60,15 +60,20 @@ def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
     in ONE job: they ride the checkpoint materialization as ``observe``
     metrics — the same fold-the-probe-into-the-write move as the BM25
     meta observe (exact under task retries, SPARK-29345) — instead of
-    paying a second full pass per round.  Both eager checkpoint flavors
-    run under ``withAction``, so the observation fires when the
-    materialization job completes (verified on local and reliable
-    checkpoints; ``tests/test_graph.py`` checks the observed values
-    against a separate aggregate job)."""
-    from pyspark.sql import Observation
+    paying a second full pass.  Both eager checkpoint flavors run under
+    ``withAction``, so the observation fires when the materialization
+    job completes (verified on local and reliable checkpoints;
+    ``tests/test_graph.py`` checks the observed values against a
+    separate aggregate job)."""
     obs = Observation()
     out = truncate_lineage(df.observe(obs, *aggs))
     return out, obs.get
+
+
+def _n():
+    """The row count, as the observed metric ``n`` (built per call: a
+    Column needs an active SparkContext)."""
+    return F.count(F.lit(1)).alias("n")
 
 
 def _truncate_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
@@ -82,17 +87,96 @@ def _truncate_signed(edges: DataFrame) -> tuple[DataFrame, tuple[int, int]]:
     round).  The sum is decimal(38,0): exact and overflow-free under
     ANSI mode."""
     out, m = _checkpoint_observed(
-        edges, F.count(F.lit(1)).alias("n"),
+        edges, _n(),
         F.coalesce(F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")),
                    F.lit(0)).cast("decimal(38,0)").alias("h"))
     return out, (int(m["n"]), int(m["h"]))
 
 
+def _edges(df: DataFrame, u, v, *extra) -> DataFrame:
+    """``df`` projected to the endpoint expressions ``u`` and ``v`` (plus
+    the ``extra`` columns), without self-loops and without edges that
+    have a NULL endpoint (the comparison is NULL there, which drops the
+    row as well)."""
+    return (df.select(u.alias("u"), v.alias("v"), *extra)
+            .where(F.col("u") != F.col("v")))
+
+
+def _undirected(pairs: DataFrame, id_a, id_b) -> DataFrame:
+    """The distinct undirected edges ``(a, b)`` with ``a < b`` of the
+    pair columns (names or Column expressions) ``id_a`` and ``id_b``."""
+    return (_edges(pairs, F.least(id_a, id_b), F.greatest(id_a, id_b))
+            .distinct()
+            .select(F.col("u").alias("a"), F.col("v").alias("b")))
+
+
+def _symmetric(e: DataFrame, a: str, b: str) -> DataFrame:
+    """The edges ``(a, b)`` of ``e`` in both directions."""
+    return e.union(e.select(F.col(b).alias(a), F.col(a).alias(b)))
+
+
+def _nodes(e: DataFrame) -> DataFrame:
+    """The distinct endpoints ``id`` of the edges ``(u, v)``."""
+    return (e.select(F.col("u").alias("id"))
+            .union(e.select(F.col("v").alias("id"))).distinct())
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(id, d)``: the degree of every node of the undirected edges
+    ``(a, b)``."""
+    return (e.select(F.col("a").alias("id"))
+            .union(e.select(F.col("b").alias("id")))
+            .groupBy("id").agg(F.count(F.lit(1)).alias("d")))
+
+
+def _seed_frame(e: DataFrame, seeds: DataFrame, seed_col: str, col: str,
+                name: str) -> DataFrame:
+    """``(id, col = 0)`` for the distinct ``seed_col`` ids of ``seeds``
+    that are endpoints of the edges ``e``, checkpointed.  Seeds the graph
+    has never seen are ignored; raises when none is left."""
+    sd, m = _checkpoint_observed(
+        seeds.select(F.col(seed_col).cast("long").alias("id")).distinct()
+             .join(_nodes(e), "id", "left_semi")
+             .select("id", F.lit(0).cast("long").alias(col)), _n())
+    if m["n"] == 0:
+        raise ValueError(f"{name}: no seed id appears in the graph — "
+                         f"no {col} would be defined")
+    return sd
+
+
+def _rounds(state: DataFrame, step, n: int) -> DataFrame:
+    """``n`` rounds of ``state = step(state)``.  Lineage is truncated
+    after every other round and after the last: plan growth between
+    checkpoints is linear (one join + one aggregate per round), so
+    this halves the materialization jobs while keeping the plan
+    bounded, and the result always has a truncated lineage."""
+    for i in range(n):
+        state = step(state)
+        if i % 2 == 1 or i == n - 1:
+            state = truncate_lineage(state)
+    return state
+
+
+def _fixpoint(state: DataFrame, sig, step, checkpoint, max_iter: int,
+              name: str, hint: str) -> DataFrame:
+    """Iterate ``state, sig' = checkpoint(step(state))`` until the
+    signature repeats, and return that state.  ``checkpoint`` truncates
+    the lineage and observes the signature in the same job; ``sig`` is
+    the signature of the initial ``state``.  Raises after ``max_iter``
+    rounds without a repeat: an unconverged result would be wrong."""
+    for _ in range(max_iter):
+        state, nxt = checkpoint(step(state))
+        if nxt == sig:
+            return state
+        sig = nxt
+    raise RuntimeError(
+        f"{name} did not converge in {max_iter} rounds — {hint}")
+
+
 def _large_star(edges: DataFrame) -> DataFrame:
     """For each node u, connect every strictly-larger neighbor to
     m = min(Γ(u) ∪ {u}).  One groupBy + one join, both keyed on u."""
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
+    sym = _symmetric(edges, "u", "v")
     mins = (sym.groupBy("u").agg(F.min("v").alias("mn"))
             .select("u", F.least("mn", "u").alias("m")))
     return (sym.join(mins, "u")
@@ -104,9 +188,7 @@ def _large_star(edges: DataFrame) -> DataFrame:
 def _small_star(edges: DataFrame) -> DataFrame:
     """For each node u, link u and all its ≤-neighbors to the minimum of
     that set.  Input edges are (u, v) with v < u after large-star."""
-    sym = edges.union(
-        edges.select(F.col("v").alias("u"), F.col("u").alias("v")))
-    sm = sym.where(F.col("v") < F.col("u"))
+    sm = _symmetric(edges, "u", "v").where(F.col("v") < F.col("u"))
     mins = sm.groupBy("u").agg(F.min("v").alias("m"))
     relink = (sm.join(mins, "u")
               .where(F.col("v") != F.col("m"))
@@ -131,11 +213,10 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # collect(), not toLocalIterator() (r15): the caller only enters
-    # here at or below driver_threshold edges (a few MB — an explicitly
-    # bounded driver pull), and toLocalIterator schedules one sequential
-    # fetch job PER PARTITION — measured ~0.4-1.2 s of pure scheduling
-    # floor on a 32-partition checkpointed edge set vs one ~40 ms job.
+    # collect(), not toLocalIterator(): the caller only enters here at
+    # or below driver_threshold edges (a few MB — an explicitly bounded
+    # driver pull), and toLocalIterator schedules one sequential fetch
+    # job PER PARTITION.
     for row in edges.collect():
         u, v = row["u"], row["v"]
         parent.setdefault(u, u)
@@ -179,25 +260,17 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
     labeling.
     """
     edges, sig = _truncate_signed(
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
-             .where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                    & (F.col("u") != F.col("v")))
-             .distinct())
+        _edges(pairs, F.col(id_a), F.col(id_b)).distinct())
     if sig[0] == 0:
         return edges.select(F.col("u").alias("id"),
                             F.col("v").alias("component"))
     if sig[0] <= driver_threshold:
         return _driver_union_find(edges)
-    for _ in range(max_iter):
-        edges, nxt = _truncate_signed(_small_star(_large_star(edges)))
-        if nxt == sig:
-            break
-        sig = nxt
-    else:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} rounds "
-            "— edge set is still changing; this exceeds the O(log² n) "
-            "bound for any realizable graph and indicates a bug.")
+    edges = _fixpoint(
+        edges, sig, lambda e: _small_star(_large_star(e)),
+        _truncate_signed, max_iter, "connected_components",
+        "edge set is still changing; this exceeds the O(log² n) bound "
+        "for any realizable graph and indicates a bug.")
     # Fixpoint: edges are (member, component_min) for every non-root
     # member.  Roots (component minima) have no outgoing edge — add their
     # self-mapping from the distinct target set.
@@ -325,9 +398,9 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
     stationary edge table, one map-side-combined ``groupBy(dst)``, and
     the dangling mass folds in as a one-row broadcast (no driver collect
     inside the loop).  Per-iteration shuffle volume is O(nodes +
-    edges-after-combine), never O(edges · iterations) of lineage: each
-    new rank vector is eagerly checkpointed, truncating the plan exactly as
-    ``connected_components`` does.  Dangling mass (outdeg-0 nodes) is
+    edges-after-combine), never O(edges · iterations) of lineage: the
+    rank vector is eagerly checkpointed every other round and after the
+    last (:func:`_rounds`).  Dangling mass (outdeg-0 nodes) is
     redistributed uniformly — the standard stochastic-matrix completion —
     so rank mass is conserved up to floor leakage.
 
@@ -356,10 +429,13 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                         · damping_pm) div 1000
 
     with ``wstrength`` the node's total outgoing weight — per-EDGE
-    integer ops instead of the unweighted per-node divide, still exact
-    and engine-replayable.  The multiply tightens the overflow bound to
-    ``(n + 1) · unit · max(w) < 2⁶²``, checked at entry (lower ``unit``
-    for heavy-weight graphs); weights < 1 raise.
+    integer ops, still exact and engine-replayable.  The unweighted
+    graph runs the same recurrence with every distinct edge at
+    ``w = 1``: ``wstrength`` is then ``outdeg`` and
+    ``(rank · 1) div outdeg`` is the unweighted ``contrib``.  The
+    multiply tightens the overflow bound to ``(n + 1) · unit · max(w) <
+    2⁶²``, checked at entry (lower ``unit`` for heavy-weight graphs);
+    weights < 1 raise.
 
     Reference scope: the reference engine has no graph operators; this is
     beyond-parity capability (host/document authority scoring for
@@ -375,110 +451,86 @@ def pagerank(edges: DataFrame, src: str = "src", dst: str = "dst",
                          f"got {iterations}")
     if unit < 1000:
         raise ValueError(f"unit must be >= 1000, got {unit}")
-    base = edges.select(
-        F.col(src).cast("long").alias("u"),
-        F.col(dst).cast("long").alias("v"),
-        *([F.col(weight_col).cast("long").alias("w")]
-          if weight_col is not None else []))
-    base = base.where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                      & (F.col("u") != F.col("v")))
-    if weight_col is not None:
-        e = (base.groupBy("u", "v").agg(F.sum("w").alias("w"))
-             .repartition("u").transform(truncate_lineage))
-        wstats = e.agg(F.min("w").alias("lo"),
-                       F.max("w").alias("hi")).collect()[0]
-        w_min = wstats["lo"] if wstats["lo"] is not None else 1
-        w_max = wstats["hi"] if wstats["hi"] is not None else 1
-        if w_min < 1:
-            raise ValueError(
-                f"pagerank: edge weights must be >= 1, found {w_min}")
-        deg = e.groupBy("u").agg(F.sum("w").alias("outdeg"))
-    else:
-        w_max = 1
-        e = (base.distinct().repartition("u")
-             .transform(truncate_lineage))
-        deg = e.groupBy("u").agg(F.count(F.lit(1)).alias("outdeg"))
-    nodes = (e.select("u").union(e.select(F.col("v").alias("u")))
-             .distinct().select(F.col("u").alias("id"))
-             .transform(truncate_lineage))
-    n = nodes.count()
+    w = F.col(weight_col) if weight_col is not None else F.lit(1)
+    e = _edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"),
+               w.cast("long").alias("w"))
+    # duplicate weighted edges SUM; duplicate unweighted ones collapse
+    e = (e.groupBy("u", "v").agg(F.sum("w").alias("w"))
+         if weight_col is not None else e.distinct())
+    e, wstats = _checkpoint_observed(
+        e.repartition("u"), F.min("w").alias("lo"), F.max("w").alias("hi"))
+    if wstats["lo"] is not None and wstats["lo"] < 1:
+        raise ValueError(
+            f"pagerank: edge weights must be >= 1, found {wstats['lo']}")
+    w_max = wstats["hi"] or 1
+    deg = e.groupBy("u").agg(F.sum("w").alias("outdeg"))
+    nodes = _nodes(e)
+    # (id, rank, outdeg[, is_seed]) — outdeg (and seed membership) ride
+    # with the rank vector so the loop never re-joins them; NULL outdeg
+    # marks a dangling node.  Whether any dangling node EXISTS is
+    # topology, not rank state — observed once here, so the common
+    # all-nodes-emit case (symmetric dup/host graphs) never pays the
+    # per-iteration dangling-mass aggregate subtree.
+    ranks = (nodes.join(deg, nodes["id"] == deg["u"], "left")
+             .select("id", F.lit(unit).cast("long").alias("r"), "outdeg"))
+    keep = ["outdeg"]
+    probes = [_n(), F.count_if(F.col("outdeg").isNull()).alias("dangling")]
+    if seeds is not None:
+        sd = seeds.select(F.col(seed_col).cast("long").alias("sid")).distinct()
+        ranks = (ranks.join(sd, ranks["id"] == sd["sid"], "left")
+                 .select("id", "r", "outdeg",
+                         F.col("sid").isNotNull().alias("is_seed")))
+        keep.append("is_seed")
+        probes.append(F.count_if("is_seed").alias("s"))
+    ranks, m = _checkpoint_observed(ranks, *probes)
+    n = m["n"]
     if n == 0:
-        return nodes.select("id", F.lit(0).cast("long").alias("rank_fp"))
+        return ranks.select("id", F.lit(0).cast("long").alias("rank_fp"))
     if (n + 1) * unit * w_max >= 2 ** 62:
         raise ValueError(
             f"(n + 1) * unit * max_weight = {(n + 1) * unit * w_max} "
             "risks 64-bit overflow; pass unit <= "
             f"{2 ** 62 // ((n + 1) * w_max)} for this graph")
-    # (id, rank, outdeg[, is_seed]) — outdeg (and seed membership) ride
-    # with the rank vector so the loop never re-joins them; NULL outdeg
-    # marks a dangling node.  Whether any dangling node EXISTS is
-    # topology, not rank state — decided once here, so the common
-    # all-nodes-emit case (symmetric dup/host graphs) never pays the
-    # per-iteration dangling-mass aggregate subtree.
-    ranks = (nodes.join(deg, nodes["id"] == deg["u"], "left")
-             .select("id", F.lit(unit).cast("long").alias("r"), "outdeg"))
-    if seeds is not None:
-        sd = (seeds.select(F.col(seed_col).cast("long").alias("sid"))
-              .where(F.col("sid").isNotNull()).distinct())
-        ranks = (ranks.join(sd, ranks["id"] == sd["sid"], "left")
-                 .select("id", "r", "outdeg",
-                         F.col("sid").isNotNull().alias("is_seed")))
-        s_count = ranks.where("is_seed").count()
-        if s_count == 0:
-            raise ValueError(
-                "pagerank: no seed id appears in the graph — the "
-                "personalized teleport has nowhere to land")
-        seed_tele = ((1000 - damping_pm) * n * unit) // (1000 * s_count)
-        tele_col = F.when(F.col("is_seed"),
-                          F.lit(seed_tele)).otherwise(F.lit(0))
+    if seeds is None:
+        tele, n_share = ((1000 - damping_pm) * unit) // 1000, n
+    elif m["s"] == 0:
+        raise ValueError(
+            "pagerank: no seed id appears in the graph — the "
+            "personalized teleport has nowhere to land")
     else:
-        s_count = 0
-        tele_col = F.lit(((1000 - damping_pm) * unit) // 1000)
-    ranks = ranks.transform(truncate_lineage)
-    has_dangling = deg.count() < n
-    for i in range(iterations):
+        tele = ((1000 - damping_pm) * n * unit) // (1000 * m["s"])
+        n_share = m["s"]
+
+    def to_seeds(c):
+        # personalized mode: teleport and dangling mass land on seeds only
+        if seeds is None:
+            return c
+        return F.when(F.col("is_seed"), c).otherwise(F.lit(0))
+
+    def step(ranks: DataFrame) -> DataFrame:
         # `div` is SQL integer division — never `/`, which promotes to
         # double and loses exactness past 2^53
-        if weight_col is not None:
-            rv = (ranks.where(F.col("outdeg").isNotNull())
-                  .select(F.col("id").alias("cu"), "r",
-                          F.col("outdeg").alias("ws")))
-            inflow = (e.join(rv, e["u"] == rv["cu"])
-                      .select("v", F.expr(
-                          f"(((r * w) div ws) * {damping_pm}) div 1000")
-                          .alias("c"))
-                      .groupBy("v").agg(F.sum("c").alias("inflow")))
-        else:
-            contrib = (ranks.where(F.col("outdeg").isNotNull())
-                       .select(F.col("id").alias("cu"),
-                               F.expr(f"((r div outdeg) * {damping_pm}) "
-                                      "div 1000").alias("c")))
-            inflow = (e.join(contrib, e["u"] == contrib["cu"])
-                      .groupBy("v").agg(F.sum("c").alias("inflow")))
-        new_r = (tele_col.cast("long")
+        rv = (ranks.where(F.col("outdeg").isNotNull())
+              .select(F.col("id").alias("cu"), "r",
+                      F.col("outdeg").alias("ws")))
+        inflow = (e.join(rv, e["u"] == rv["cu"])
+                  .select("v", F.expr(
+                      f"(((r * w) div ws) * {damping_pm}) div 1000")
+                      .alias("c"))
+                  .groupBy("v").agg(F.sum("c").alias("inflow")))
+        new_r = (to_seeds(F.lit(tele)).cast("long")
                  + F.coalesce(F.col("inflow"), F.lit(0)))
         ranks = ranks.join(inflow, ranks["id"] == inflow["v"], "left")
-        if has_dangling:
+        if m["dangling"]:
             dang = (ranks.where(F.col("outdeg").isNull())
                     .agg(F.coalesce(F.sum("r"), F.lit(0))
                          .alias("__dang")))
             ranks = ranks.crossJoin(F.broadcast(dang))
-            if seeds is not None:
-                new_r = new_r + F.when(
-                    F.col("is_seed"),
-                    F.expr(f"((__dang div {s_count}) * {damping_pm}) "
-                           "div 1000")).otherwise(F.lit(0))
-            else:
-                new_r = new_r + F.expr(
-                    f"((__dang div {n}) * {damping_pm}) div 1000")
-        keep = ["outdeg"] + (["is_seed"] if seeds is not None else [])
-        ranks = ranks.select("id", new_r.alias("r"), *keep)
-        # checkpoint every other round: plan growth between checkpoints
-        # is linear (one join + one agg per round), so k=2 halves the
-        # materialization jobs while keeping the plan bounded; the LAST
-        # round always checkpoints so callers get a truncated lineage.
-        if i % 2 == 1 or i == iterations - 1:
-            ranks = ranks.transform(truncate_lineage)
+            new_r = new_r + to_seeds(F.expr(
+                f"((__dang div {n_share}) * {damping_pm}) div 1000"))
+        return ranks.select("id", new_r.alias("r"), *keep)
+
+    ranks = _rounds(ranks, step, iterations)
     return ranks.select("id", F.col("r").alias("rank_fp"))
 
 
@@ -522,34 +574,27 @@ def label_propagation(pairs: DataFrame, id_a: str = "id_a",
     if rounds < 0 or rounds > max_rounds_guard:
         raise ValueError(f"rounds must be in [0, {max_rounds_guard}], "
                          f"got {rounds}")
-    e = (pairs.select(F.least(F.col(id_a).cast("long"),
-                              F.col(id_b).cast("long")).alias("a"),
-                      F.greatest(F.col(id_a).cast("long"),
-                                 F.col(id_b).cast("long")).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct())
-    sym = (e.union(e.select(F.col("b").alias("a"),
-                            F.col("a").alias("b")))
-           .repartition("a")
+    e = _undirected(pairs, F.col(id_a).cast("long"),
+                    F.col(id_b).cast("long"))
+    sym = (_symmetric(e, "a", "b").repartition("a")
            .transform(truncate_lineage))
     labels = (sym.select(F.col("a").alias("id")).distinct()
               .select("id", F.col("id").alias("label"))
               .transform(truncate_lineage))
-    for i in range(rounds):
+
+    def step(labels: DataFrame) -> DataFrame:
         nbl = (sym.join(labels.select(F.col("id").alias("b"),
                                       F.col("label").alias("lab")), "b")
                .groupBy("a", "lab")
                .agg(F.count(F.lit(1)).alias("c")))
-        labels = (nbl.groupBy("a")
-                  .agg(F.max(F.struct(F.col("c"),
-                                      (-F.col("lab")).alias("nl")))
-                       .alias("m"))
-                  .select(F.col("a").alias("id"),
-                          (-F.col("m.nl")).alias("label")))
-        if i % 2 == 1 or i == rounds - 1:
-            labels = labels.transform(truncate_lineage)
-    return labels
+        return (nbl.groupBy("a")
+                .agg(F.max(F.struct(F.col("c"),
+                                    (-F.col("lab")).alias("nl")))
+                     .alias("m"))
+                .select(F.col("a").alias("id"),
+                        (-F.col("m.nl")).alias("label")))
+
+    return _rounds(labels, step, rounds)
 
 
 # =====================================================================
@@ -591,10 +636,11 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     Scale shape: identical to :func:`pagerank` — the deduplicated edge
     set is hash-partitioned and checkpointed once (``truncate_lineage``); each
     iteration is two keyed joins against it with map-side-combined
-    sums; the normalization maxima fold in as one-row broadcasts (no
-    driver collect inside the loop); lineage truncates every other
-    round.  Nodes with no in-edges (pure hubs) report ``auth_fp = 0``,
-    sinks report ``hub_fp = 0``.
+    sums, each checkpointed with its maximum (the normalizer) observed
+    on that same job, so it enters the next plan as a literal; the
+    score vector's lineage truncates every other round.  Nodes with no
+    in-edges (pure hubs) report ``auth_fp = 0``, sinks report
+    ``hub_fp = 0``.
 
     The curation use: bipartite host→document or supplier→part graphs
     where "good hubs point at good authorities" separates aggregator
@@ -606,62 +652,41 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                          f"got {iterations}")
     if unit < 1000:
         raise ValueError(f"unit must be >= 1000, got {unit}")
-    e = (edges.select(F.col(src).cast("long").alias("u"),
-                      F.col(dst).cast("long").alias("v"))
-         .where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                & (F.col("u") != F.col("v")))
-         .distinct().repartition("u")
-         .transform(truncate_lineage))
-    nodes = (e.select(F.col("u").alias("id"))
-             .union(e.select(F.col("v").alias("id")))
-             .distinct().transform(truncate_lineage))
-    n = nodes.count()
+    e = (_edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
+         .distinct().repartition("u").transform(truncate_lineage))
+    state, m = _checkpoint_observed(
+        _nodes(e).select("id", F.lit(unit).cast("long").alias("h"),
+                         F.lit(unit).cast("long").alias("a")), _n())
+    n = m["n"]
     if n == 0:
-        return nodes.select("id",
+        return state.select("id",
                             F.lit(0).cast("long").alias("hub_fp"),
                             F.lit(0).cast("long").alias("auth_fp"))
     if n * unit * unit >= 2 ** 62:
         raise ValueError(
             f"n * unit^2 = {n * unit * unit} risks 64-bit overflow; "
             f"pass unit <= {int((2 ** 62 // n) ** 0.5)} for this graph")
-    state = nodes.select("id", F.lit(unit).cast("long").alias("h"),
-                         F.lit(unit).cast("long").alias("a"))
-    state = state.transform(truncate_lineage)
-    for i in range(iterations):
-        hv = state.select(F.col("id").alias("hu"), "h")
-        # checkpoint the node-vector-sized raw sums (r14): the max
-        # normalizer is a separate broadcast subtree, so without the
-        # truncation each half-step's corpus join + aggregate executed
-        # TWICE (once for the state join, once inside the max — the
-        # executed plan showed the whole subtree duplicated with no
-        # exchange reuse); the checkpoint is ≤ n rows, and the max then
-        # folds from materialized rows
-        a_raw = truncate_lineage(e.join(hv, e["u"] == F.col("hu"))
-                                 .groupBy("v").agg(F.sum("h").alias("ar")))
-        a_max = a_raw.agg(
-            F.greatest(F.coalesce(F.max("ar"), F.lit(1)), F.lit(1))
-            .alias("__am"))
-        state = (state.join(a_raw, state["id"] == a_raw["v"], "left")
-                 .crossJoin(F.broadcast(a_max))
-                 .select("id", "h",
-                         F.coalesce(
-                             F.expr("(ar * " + str(unit) + ") div __am"),
-                             F.lit(0)).alias("a")))
-        av = state.select(F.col("id").alias("auv"), F.col("a").alias("a2"))
-        h_raw = truncate_lineage(e.join(av, e["v"] == F.col("auv"))
-                                 .groupBy("u").agg(F.sum("a2").alias("hr")))
-        h_max = h_raw.agg(
-            F.greatest(F.coalesce(F.max("hr"), F.lit(1)), F.lit(1))
-            .alias("__hm"))
-        state = (state.join(h_raw, state["id"] == h_raw["u"], "left")
-                 .crossJoin(F.broadcast(h_max))
-                 .select("id",
-                         F.coalesce(
-                             F.expr("(hr * " + str(unit) + ") div __hm"),
-                             F.lit(0)).alias("h"),
-                         "a"))
-        if i % 2 == 1 or i == iterations - 1:
-            state = state.transform(truncate_lineage)
+
+    def half(state: DataFrame, frm: str, to: str, x: str,
+             y: str) -> DataFrame:
+        """``state`` with score ``y`` recomputed from the ``x`` scores
+        flowing along the edges ``frm → to``.  The node-sized raw sums
+        are checkpointed and their maximum, the normalizer, is observed
+        on that job; nodes nothing flows into score 0."""
+        raw, mx = _checkpoint_observed(
+            e.join(state.select(F.col("id").alias(frm), x), frm)
+             .groupBy(F.col(to).alias("__id"))
+             .agg(F.sum(x).alias("__raw")),
+            F.max("__raw").alias("mx"))
+        norm = max(mx["mx"] or 1, 1)
+        new = F.coalesce(F.expr(f"(__raw * {unit}) div {norm}"),
+                         F.lit(0)).alias(y)
+        return (state.join(raw, state["id"] == raw["__id"], "left")
+                .select("id", *(new if c == y else c for c in ("h", "a"))))
+
+    state = _rounds(
+        state, lambda s: half(half(s, "u", "v", "h", "a"), "v", "u", "a", "h"),
+        iterations)
     return state.select("id", F.col("h").alias("hub_fp"),
                         F.col("a").alias("auth_fp"))
 
@@ -708,35 +733,19 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = (edges.select(F.col(src).cast("long").alias("u"),
-                      F.col(dst).cast("long").alias("v"))
-         .where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                & (F.col("u") != F.col("v")))
-         .distinct().repartition("u")
-         .transform(truncate_lineage))
-    nodes = (e.select("u").union(e.select(F.col("v").alias("u")))
-             .distinct())
-    sd = (seeds.select(F.col(seed_col).cast("long").alias("id"))
-          .where(F.col("id").isNotNull()).distinct()
-          .join(nodes.select(F.col("u").alias("id")), "id", "left_semi")
-          .transform(truncate_lineage))
-    if sd.isEmpty():
-        raise ValueError(
-            "bfs_distances: no seed id appears in the graph — every "
-            "distance would be undefined")
-    visited = sd.select("id", F.lit(0).cast("long").alias("dist"))
-    visited = visited.transform(truncate_lineage)
+    e = (_edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
+         .distinct().repartition("u").transform(truncate_lineage))
+    visited = _seed_frame(e, seeds, seed_col, "dist", "bfs_distances")
     frontier = visited.select("id")
     for hop in range(1, max_hops + 1):
-        nxt = (e.join(frontier.withColumnRenamed("id", "u"), "u")
-               .select(F.col("v").alias("id")).distinct()
-               .join(visited, "id", "left_anti")
-               .transform(truncate_lineage))
-        if nxt.isEmpty():
+        nxt, m = _checkpoint_observed(
+            e.join(frontier.withColumnRenamed("id", "u"), "u")
+             .select(F.col("v").alias("id")).distinct()
+             .join(visited, "id", "left_anti"), _n())
+        if m["n"] == 0:
             break
-        visited = (visited.union(
-            nxt.select("id", F.lit(hop).cast("long").alias("dist")))
-            .transform(truncate_lineage))
+        visited = truncate_lineage(visited.union(
+            nxt.select("id", F.lit(hop).cast("long").alias("dist"))))
         frontier = nxt
     return visited
 
@@ -773,18 +782,14 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = (edges.select(F.col(src).cast("long").alias("u"),
-                      F.col(dst).cast("long").alias("v"),
-                      F.col(weight_col).cast("long").alias("w"))
-         .where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                & F.col("w").isNotNull() & (F.col("u") != F.col("v")))
-         .groupBy("u", "v").agg(F.min("w").alias("w"))
-         .repartition("u")
-         .transform(truncate_lineage))
-    wstats = e.agg(F.min("w").alias("lo"),
-                   F.max("w").alias("hi")).collect()[0]
-    w_min = wstats["lo"] if wstats["lo"] is not None else 0
-    w_max = wstats["hi"] if wstats["hi"] is not None else 0
+    e, wstats = _checkpoint_observed(
+        _edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"),
+               F.col(weight_col).cast("long").alias("w"))
+        .where(F.col("w").isNotNull())
+        .groupBy("u", "v").agg(F.min("w").alias("w"))
+        .repartition("u"),
+        F.min("w").alias("lo"), F.max("w").alias("hi"))
+    w_min, w_max = wstats["lo"] or 0, wstats["hi"] or 0
     if w_min < 0:
         raise ValueError(
             f"shortest_paths: weights must be >= 0, found {w_min}")
@@ -792,18 +797,7 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
         raise ValueError(
             f"max_hops * max_weight = {max_hops * w_max} risks 64-bit "
             "overflow; lower max_hops or rescale weights")
-    nodes = (e.select("u").union(e.select(F.col("v").alias("u")))
-             .distinct())
-    sd = (seeds.select(F.col(seed_col).cast("long").alias("id"))
-          .where(F.col("id").isNotNull()).distinct()
-          .join(nodes.select(F.col("u").alias("id")), "id", "left_semi")
-          .transform(truncate_lineage))
-    if sd.isEmpty():
-        raise ValueError(
-            "shortest_paths: no seed id appears in the graph — every "
-            "cost would be undefined")
-    dist = (sd.select("id", F.lit(0).cast("long").alias("cost"))
-            .transform(truncate_lineage))
+    dist = _seed_frame(e, seeds, seed_col, "cost", "shortest_paths")
     frontier = dist
     for _ in range(max_hops):
         cand = (e.join(frontier.select(F.col("id").alias("u"),
@@ -811,17 +805,17 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
                 .groupBy("v")
                 .agg(F.min(F.col("fc") + F.col("w")).alias("nc"))
                 .select(F.col("v").alias("id"), F.col("nc")))
-        improved = (cand.join(dist, "id", "left")
-                    .where(F.col("cost").isNull()
-                           | (F.col("nc") < F.col("cost")))
-                    .select("id", F.col("nc").alias("cost"))
-                    .transform(truncate_lineage))
-        if improved.isEmpty():
+        improved, m = _checkpoint_observed(
+            cand.join(dist, "id", "left")
+                .where(F.col("cost").isNull()
+                       | (F.col("nc") < F.col("cost")))
+                .select("id", F.col("nc").alias("cost")), _n())
+        if m["n"] == 0:
             break
-        dist = (dist.join(improved.select(F.col("id").alias("iid")),
-                          dist["id"] == F.col("iid"), "left_anti")
-                .union(improved)
-                .transform(truncate_lineage))
+        dist = truncate_lineage(
+            dist.join(improved.select(F.col("id").alias("iid")),
+                      dist["id"] == F.col("iid"), "left_anti")
+                .union(improved))
         frontier = improved
     return dist
 
@@ -862,20 +856,15 @@ def append_components(labels: DataFrame, new_pairs: DataFrame,
     a parquet table and this is a map-only rewrite — or, with a
     merge-on-read consumer, the remap itself is the delta to publish.
     """
-    np_ = (new_pairs.select(F.col(id_a).alias("u"),
-                            F.col(id_b).alias("v"))
-           .where(F.col("u").isNotNull() & F.col("v").isNotNull()
-                  & (F.col("u") != F.col("v")))
-           .distinct()
+    np_ = (_edges(new_pairs, F.col(id_a), F.col(id_b)).distinct()
            .transform(truncate_lineage))
     store = labels.select(F.col("id").alias("__sid"),
                           F.col("component").alias("__scomp"))
-    touched = (np_.select("u").union(np_.select(F.col("v").alias("u")))
-               .distinct())
+    touched = _nodes(np_)
     # label(x) = stored component, or x itself for a first-seen node
-    tl = (touched.join(store, touched["u"] == store["__sid"], "left")
-          .select(F.col("u").alias("node"),
-                  F.coalesce("__scomp", "u").alias("lab"))
+    tl = (touched.join(store, touched["id"] == store["__sid"], "left")
+          .select(F.col("id").alias("node"),
+                  F.coalesce("__scomp", "id").alias("lab"))
           .transform(truncate_lineage))
     la = tl.select(F.col("node").alias("u"), F.col("lab").alias("la"))
     lb = tl.select(F.col("node").alias("v"), F.col("lab").alias("lb"))
@@ -883,10 +872,10 @@ def append_components(labels: DataFrame, new_pairs: DataFrame,
                 .where(F.col("la") != F.col("lb"))
                 .select(F.col("la").alias("id_a"),
                         F.col("lb").alias("id_b")))
-    # no truncation here (r15): connected_components' output is already
+    # no truncation here: connected_components' output is already
     # materialized (driver union-find tiny_df, or cached star-round
-    # legs), so this filter+rename is a free view — the old checkpoint
-    # job only re-copied batch-bounded rows.  The two broadcast
+    # legs), so this filter+rename is a free view — a checkpoint would
+    # only re-copy batch-bounded rows.  The two broadcast
     # consumers below build from the same subtree (ReusedExchange).
     remap = (connected_components(quotient, max_iter=max_iter,
                                   driver_threshold=driver_threshold)
@@ -935,18 +924,10 @@ def triangle_counts(pairs: DataFrame, id_a: str = "id_a",
     cycles) — use a co-occurrence projection first, as the
     ``graph_triangles`` registry query does.
     """
-    e = (pairs.select(F.least(id_a, id_b).alias("a"),
-                      F.greatest(id_a, id_b).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct()
-         .transform(truncate_lineage))
-    deg = (e.select(F.col("a").alias("x"))
-           .union(e.select(F.col("b").alias("x")))
-           .groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-           .transform(truncate_lineage))
-    da = deg.select(F.col("x").alias("a"), F.col("d").alias("da"))
-    db = deg.select(F.col("x").alias("b"), F.col("d").alias("db"))
+    e = _undirected(pairs, id_a, id_b).transform(truncate_lineage)
+    deg = _degrees(e).transform(truncate_lineage)
+    da = deg.select(F.col("id").alias("a"), F.col("d").alias("da"))
+    db = deg.select(F.col("id").alias("b"), F.col("d").alias("db"))
     # orient low-(deg, id) -> high-(deg, id); the HEAD's degree rides
     # along so the wedge stage never re-joins the degree table
     o = (e.join(da, "a").join(db, "b")
@@ -1018,8 +999,8 @@ def cooccurrence_pairs(df: DataFrame, group_col: str, item_col: str,
         # collect would bound the pair explosion but not the collect's
         # memory).  inc is checkpointed (not persist()ed — an explicit
         # cache entry has no safe unpersist point on a lazy return value
-        # and would accumulate across calls in a long-lived session,
-        # ADVICE r12) so the size pass and the collect pass share the
+        # and would accumulate across calls in a long-lived session)
+        # so the size pass and the collect pass share the
         # dedup shuffle.  localCheckpoint blocks are freed when the plan
         # is garbage-collected; reliable-checkpoint FILES are only
         # cleaned when spark.cleaner.referenceTracking.cleanCheckpoints
@@ -1081,18 +1062,16 @@ def common_neighbor_counts(pairs: DataFrame, id_a: str = "id_a",
     FULL graph, cap or not."""
     if min_common < 1:
         raise ValueError(f"min_common must be >= 1, got {min_common}")
-    e = (pairs.select(F.least(id_a, id_b).alias("a"),
-                      F.greatest(id_a, id_b).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct()
-         .transform(truncate_lineage))
-    sym = e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-    deg = (sym.groupBy("a").agg(F.count(F.lit(1)).alias("d"))
-           .transform(truncate_lineage))
+    e = _undirected(pairs, id_a, id_b).transform(truncate_lineage)
+    sym = _symmetric(e, "a", "b")
     adj = sym
-    if max_center_degree is not None:
-        n_dropped = deg.where(F.col("d") > max_center_degree).count()
+    if max_center_degree is None:
+        deg = _degrees(e).transform(truncate_lineage)
+    else:
+        deg, m = _checkpoint_observed(
+            _degrees(e),
+            F.count_if(F.col("d") > max_center_degree).alias("n"))
+        n_dropped = m["n"]
         if n_dropped:
             import warnings
             warnings.warn(
@@ -1101,7 +1080,7 @@ def common_neighbor_counts(pairs: DataFrame, id_a: str = "id_a",
                 "generation; n_common through those hubs is undercounted "
                 "(degrees remain exact)", stacklevel=2)
         adj = sym.join(deg.where(F.col("d") <= max_center_degree)
-                       .select("a"), "a", "left_semi")
+                       .select(F.col("id").alias("a")), "a", "left_semi")
     n1 = adj.select(F.col("a").alias("c"), F.col("b").alias("na"))
     n2 = adj.select(F.col("a").alias("c"), F.col("b").alias("nb"))
     pairs_cn = (n1.join(n2, "c")
@@ -1109,8 +1088,8 @@ def common_neighbor_counts(pairs: DataFrame, id_a: str = "id_a",
                 .groupBy("na", "nb")
                 .agg(F.count(F.lit(1)).alias("n_common"))
                 .where(F.col("n_common") >= min_common))
-    da = deg.select(F.col("a").alias("na"), F.col("d").alias("deg_a"))
-    db_ = deg.select(F.col("a").alias("nb"), F.col("d").alias("deg_b"))
+    da = deg.select(F.col("id").alias("na"), F.col("d").alias("deg_a"))
+    db_ = deg.select(F.col("id").alias("nb"), F.col("d").alias("deg_b"))
     return (pairs_cn.join(da, "na").join(db_, "nb")
             .select(F.col("na").alias("id_a"), F.col("nb").alias("id_b"),
                     "n_common", "deg_a", "deg_b"))
@@ -1161,41 +1140,37 @@ def core_numbers(pairs: DataFrame, id_a: str = "id_a",
     """
     if max_rounds < 1:
         raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
-    e = (pairs.select(F.least(id_a, id_b).alias("a"),
-                      F.greatest(id_a, id_b).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct())
-    sym = (e.union(e.select(F.col("b").alias("a"), F.col("a").alias("b")))
-           .repartition("a")
-           .transform(truncate_lineage))
-    # Σ c rides each checkpoint job.  Σ degree = 2m, exact in int64 for
-    # any m < 2^62 (the coreness sums below are smaller still: c ≤ degree)
-    sum_c = F.coalesce(F.sum("c"), F.lit(0)).alias("s")
-    vals, m = _checkpoint_observed(
+    sym = (_symmetric(_undirected(pairs, id_a, id_b), "a", "b")
+           .repartition("a").transform(truncate_lineage))
+
+    def checkpoint(df: DataFrame):
+        # Σ c rides each checkpoint job.  Σ degree = 2m, exact in int64
+        # for any m < 2^62 (the coreness sums are smaller still:
+        # c ≤ degree).  Sum equality ⟺ pointwise fixpoint (monotone
+        # non-increasing sequence): no old-vs-new join and no second
+        # value column.
+        return _checkpoint_observed(
+            df, F.coalesce(F.sum("c"), F.lit(0)).alias("s"))
+
+    vals, sig = checkpoint(
         sym.groupBy("a").agg(F.count(F.lit(1)).alias("c"))
            .select(F.col("a").alias("id"), F.col("c").cast("long")
-                   .alias("c")), sum_c)
-    prev_sum = m["s"]
-    for _ in range(max_rounds):
-        vals, m = _checkpoint_observed(
-            sym.join(vals.select(F.col("id").alias("b"),
-                                 F.col("c").alias("nc")), "b")
-               .groupBy("a")
-               .agg(F.sort_array(F.collect_list("nc"), asc=False)
-                    .alias("vs"))
-               .select(F.col("a").alias("id"),
-                       F.expr("cast(size(filter(vs, (x, i) -> "
-                              "x >= i + 1)) as long)").alias("c")), sum_c)
-        # sum equality ⟺ pointwise fixpoint (monotone non-increasing
-        # sequence): no old-vs-new join and no second value column
-        if m["s"] == prev_sum:
-            return vals.select("id", F.col("c").alias("core"))
-        prev_sum = m["s"]
-    raise RuntimeError(
-        f"core_numbers did not converge in {max_rounds} rounds — "
-        "deep-chain topology; raise max_rounds deliberately or peel "
-        "offline")
+                   .alias("c")))
+
+    def step(vals: DataFrame) -> DataFrame:
+        return (sym.join(vals.select(F.col("id").alias("b"),
+                                     F.col("c").alias("nc")), "b")
+                .groupBy("a")
+                .agg(F.sort_array(F.collect_list("nc"), asc=False)
+                     .alias("vs"))
+                .select(F.col("a").alias("id"),
+                        F.expr("cast(size(filter(vs, (x, i) -> "
+                               "x >= i + 1)) as long)").alias("c")))
+
+    vals = _fixpoint(vals, sig, step, checkpoint, max_rounds,
+                     "core_numbers", "deep-chain topology; raise "
+                     "max_rounds deliberately or peel offline")
+    return vals.select("id", F.col("c").alias("core"))
 
 
 def degree_moments(pairs: DataFrame, id_a: str = "id_a",
@@ -1222,27 +1197,16 @@ def degree_moments(pairs: DataFrame, id_a: str = "id_a",
     Overflow: s_sq sums squares of degrees — bounded by m·max_deg²;
     max_deg² < 2⁶²/m holds for any graph with max_deg ≤ ~2e6 at a
     billion edges, checked cheaply via the degree aggregate."""
-    e = (pairs.select(F.least(id_a, id_b).alias("a"),
-                      F.greatest(id_a, id_b).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct()
-         .transform(truncate_lineage))
-    deg = (e.select(F.col("a").alias("x"))
-           .union(e.select(F.col("b").alias("x")))
-           .groupBy("x").agg(F.count(F.lit(1)).alias("d"))
-           .transform(truncate_lineage))
-    stats = deg.agg(F.count(F.lit(1)).alias("n"),
-                    F.max("d").alias("mx")).collect()[0]
-    n_nodes = int(stats["n"] or 0)
-    max_d = int(stats["mx"] or 0)
-    m = e.count()
+    e, m_obs = _checkpoint_observed(_undirected(pairs, id_a, id_b), _n())
+    deg, stats = _checkpoint_observed(_degrees(e), _n(),
+                                      F.max("d").alias("mx"))
+    n_nodes, max_d, m = stats["n"], stats["mx"] or 0, m_obs["n"]
     if m > 0 and m * max_d * max_d >= 2 ** 62:
         raise ValueError(
             f"degree_moments: m * max_deg^2 = {m * max_d * max_d} "
             "risks 64-bit overflow on s_sq")
-    da = deg.select(F.col("x").alias("a"), F.col("d").alias("j"))
-    db_ = deg.select(F.col("x").alias("b"), F.col("d").alias("k"))
+    da = deg.select(F.col("id").alias("a"), F.col("d").alias("j"))
+    db_ = deg.select(F.col("id").alias("b"), F.col("d").alias("k"))
     mom = (e.join(da, "a").join(db_, "b")
            .agg(F.coalesce(F.sum(F.col("j") * F.col("k")), F.lit(0))
                 .alias("s_jk"),
@@ -1272,18 +1236,10 @@ def clustering_coefficients(pairs: DataFrame, id_a: str = "id_a",
     degree and triangle branches don't each re-run the (possibly
     expensive) candidate-generation subtree."""
     pairs = pairs.transform(truncate_lineage)
-    e = (pairs.select(F.least(id_a, id_b).alias("a"),
-                      F.greatest(id_a, id_b).alias("b"))
-         .where(F.col("a").isNotNull() & F.col("b").isNotNull()
-                & (F.col("a") != F.col("b")))
-         .distinct())
-    deg = (e.select(F.col("a").alias("id"))
-           .union(e.select(F.col("b").alias("id")))
-           .groupBy("id").agg(F.count(F.lit(1)).alias("__d"))
-           .where(F.col("__d") >= 2))
+    deg = _degrees(_undirected(pairs, id_a, id_b)).where(F.col("d") >= 2)
     tri = triangle_counts(pairs, id_a, id_b)
     return (deg.join(tri, "id", "left")
             .select("id",
                     F.coalesce("n_tri", F.lit(0)).alias("n_tri"),
-                    (F.col("__d") * (F.col("__d") - 1) / 2)
+                    (F.col("d") * (F.col("d") - 1) / 2)
                     .cast("long").alias("n_wedges")))

@@ -120,16 +120,18 @@ def recover_staged(spark, path: str) -> bool:
 
 def staged_overwrite(df: DataFrame, path: str,
                      partition_cols: tuple = (),
-                     n_files: int | None = None) -> None:
+                     n_files: int | None = None,
+                     route_cols: tuple = ()) -> None:
     """Replace the parquet dataset at ``path`` with ``df``, which may read
     from ``path`` itself (a direct ``mode("overwrite")`` would truncate
     the files the lazy read still points at).
 
     Layout: a dataset partitioned by ``partition_cols`` has its rows
-    routed to tasks by the hash of the last partition column — into
-    ``n_files`` tasks, or ``spark.sql.shuffle.partitions`` when None — so
-    each partition is written by one task, as one file; an unpartitioned
-    dataset is coalesced to ``n_files`` files.
+    routed to tasks by the hash of ``route_cols`` (default: the last
+    partition column, so each partition is written by one task, as one
+    file) — into ``n_files`` tasks, or ``spark.sql.shuffle.partitions``
+    when None; an unpartitioned dataset is coalesced to ``n_files``
+    files.
 
     Swap: ``df`` is written to ``<path>.__stage_tmp``; then the live copy
     is renamed to ``<path>.__stage_old`` and the new one live.  Every
@@ -140,8 +142,9 @@ def staged_overwrite(df: DataFrame, path: str,
     base = path.rstrip("/")
     tmp, old = base + ".__stage_tmp", base + ".__stage_old"
     if partition_cols:
-        key = partition_cols[-1]
-        df = df.repartition(n_files, key) if n_files else df.repartition(key)
+        keys = route_cols or partition_cols[-1:]
+        df = (df.repartition(n_files, *keys) if n_files
+              else df.repartition(*keys))
     else:
         df = df.coalesce(n_files)
     df.write.mode("overwrite").partitionBy(*partition_cols).parquet(tmp)
@@ -176,12 +179,14 @@ def dedup_rewrite(spark, path: str, key_cols: list[str],
     """Drop the duplicate rows (one row per ``key_cols``) that
     at-least-once appends leave in the dataset at ``path`` and rewrite
     it at ``n_files`` files; a ``batch_id``-partitioned dataset keeps
-    that layout with its history folded into ``batch_id=-1``.  Recovers
-    an interrupted swap first, so a re-run after a crash completes."""
+    that layout with its history folded into ``batch_id=-1``, its rows
+    routed to the ``n_files`` files by the hash of ``key_cols`` (every
+    row shares the one ``batch_id``).  Recovers an interrupted swap
+    first, so a re-run after a crash completes."""
     recover_staged(spark, path)
     df, cols = _fold_batches(
         spark.read.parquet(path).dropDuplicates(key_cols))
-    staged_overwrite(df, path, cols, n_files)
+    staged_overwrite(df, path, cols, n_files, tuple(key_cols))
 
 
 def assert_quiesced(spark, checkpoint_dir: str) -> None:

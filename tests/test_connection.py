@@ -7,6 +7,7 @@ def test_missing_attr_probe_does_not_relist(spark, tmp_path, monkeypatch):
     """Round-4 verdict #3: hasattr probes / autocomplete on missing names
     must not re-run the directory listing + parquet footer reads; only an
     actual source change (dir mtime) re-lists."""
+    import os
     import shutil
     import time
 
@@ -34,6 +35,13 @@ def test_missing_attr_probe_does_not_relist(spark, tmp_path, monkeypatch):
                 tmp_path / "nation.parquet")
     assert db.nation.len == 25
     assert len(calls) == 2
+    # a table added within the same directory mtime tick is still found
+    mtime = os.path.getmtime(tmp_path)
+    shutil.copy("/root/testdata/sf0.001/region.parquet",
+                tmp_path / "region2.parquet")
+    os.utime(tmp_path, (mtime, mtime))
+    assert db.region2.len == 5
+    assert len(calls) == 3
 
 
 @pytest.mark.parametrize("layout", ["int96_file", "nanos_dir"])

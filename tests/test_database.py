@@ -347,35 +347,6 @@ def test_col_iterator_and_none_sort(db):
         None, None, 1, 2, 3]
 
 
-def test_same_mtime_tick_table_discovered(spark, tmp_path):
-    """ADVICE r5 (database.py stamp race): a table added in the SAME
-    coarse-fs mtime tick as the previous refresh, first probed after the
-    entry-capture grace window, must still be discovered via the one-shot
-    listdir fallback."""
-    import pandas as pd
-
-    src = tmp_path / "db"
-    src.mkdir()
-    pd.DataFrame({"a": [1, 2]}).to_parquet(src / "alpha.parquet")
-    db = Database(str(src), spark=spark)
-    assert db.tables == ["alpha"]
-
-    pd.DataFrame({"b": [3]}).to_parquet(src / "beta.parquet")
-    import os
-    mtime = os.path.getmtime(src)
-    # Simulate: previous refresh captured entries BEFORE beta landed, and
-    # the dir mtime did not change (same tick).  The fresh probe has aged
-    # out of the grace window -> (mtime, None).
-    db._registry_stamp = (mtime, ("alpha.parquet",))
-    db._source_stamp = lambda: (mtime, None)
-    assert db.beta.df.count() == 1
-    # And the promoted stamp path: identical entries -> no refresh, stamp
-    # upgraded to carry the verified entry list.
-    db._registry_stamp = (mtime, tuple(sorted(os.listdir(src))))
-    db._maybe_refresh_registry()
-    assert db._registry_stamp[1] is not None
-
-
 def test_sql_sink_escapes_identifiers(spark, tmp_path):
     """ADVICE r5: '"' inside table/column names must be doubled in the
     emitted .sql script, not break (or inject into) the statement."""

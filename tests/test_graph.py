@@ -1120,36 +1120,49 @@ def _signature(edges):
 def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path):
     from pathlib import Path
 
-    from pandas_db_spark.operators.graph import core_numbers, pagerank
-
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None  # the local[32] default
 
     edges = ([(i, (i * 3 + 1) % 40) for i in range(40)]
              + [(i, (i + 7) % 40) for i in range(40)])
     df = spark.createDataFrame(edges, "src long, dst long")
+    wdf = spark.createDataFrame([(u, v, (u * 7 + v) % 5) for u, v in edges],
+                                "src long, dst long, w long")
+    seeds = spark.createDataFrame([(0,), (13,)], "id long")
     pairs = spark.createDataFrame(
         [(a, b) for a in range(8) for b in range(a + 1, 8)]
         + [(100 + i, 101 + i) for i in range(5)], "id_a long, id_b long")
 
-    local_pr = {r["id"]: r["rank_fp"]
-                for r in pagerank(df, iterations=4).collect()}
-    local_core = {r["id"]: r["core"]
-                  for r in core_numbers(pairs).collect()}
+    def run():
+        # the frontier loops and HITS branch on values observed on their
+        # checkpoint jobs, so both flavors must observe the same values
+        return {
+            "pagerank": {r["id"]: r["rank_fp"]
+                         for r in G.pagerank(df, iterations=4).collect()},
+            "core": {r["id"]: r["core"]
+                     for r in G.core_numbers(pairs).collect()},
+            "hits": {r["id"]: (r["hub_fp"], r["auth_fp"])
+                     for r in G.hits(df, iterations=3).collect()},
+            "lpa": {r["id"]: r["label"] for r in
+                    G.label_propagation(pairs, rounds=3).collect()},
+            "bfs": {r["id"]: r["dist"] for r in
+                    G.bfs_distances(df, seeds, max_hops=8).collect()},
+            "sssp": {r["id"]: r["cost"] for r in
+                     G.shortest_paths(wdf, seeds, max_hops=8).collect()},
+        }
+
+    local = run()
+    assert all(local.values())
     e = spark.createDataFrame(edges, "u long, v long")
     assert G._truncate_signed(e)[1] == _signature(e)
 
     ckdir = tmp_path / "reliable_ck"
     sc.setCheckpointDir(str(ckdir))
     try:
-        rel_pr = {r["id"]: r["rank_fp"]
-                  for r in pagerank(df, iterations=4).collect()}
-        rel_core = {r["id"]: r["core"]
-                    for r in core_numbers(pairs).collect()}
+        reliable = run()
         assert G._truncate_signed(e)[1] == _signature(e)
         # bit-identical across checkpoint flavors (integer fixed point)
-        assert rel_pr == local_pr
-        assert rel_core == local_core
+        assert reliable == local
         # the reliable path actually wrote checkpoint files to the dir —
         # the property localCheckpoint can never provide
         ck_files = [p for p in Path(str(ckdir)).rglob("*") if p.is_file()]

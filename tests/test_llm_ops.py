@@ -1517,6 +1517,10 @@ def test_compact_signlsh_store(spark, emb, tmp_path):
     assert {r["batch_id"] for r in vecs.select("batch_id")
             .distinct().collect()} == {-1}
     assert os.path.isdir(store_dir + "/vecs/batch_id=-1")
+    # the folded partition is still written as up to n_files files
+    n_vec_files = sum(f.endswith(".parquet")
+                      for f in os.listdir(store_dir + "/vecs/batch_id=-1"))
+    assert 1 < n_vec_files <= 8
     # the compacted store still answers probes correctly
     copies = (e.where(F.col("vec_id") < 5)
               .withColumn("vec_id", F.col("vec_id") + 1_000_000))
