@@ -41,6 +41,16 @@ frame (node counts, weight ranges, emptiness, convergence signatures)
 as an ``observe`` metric of that checkpoint's own job
 (:func:`_checkpoint_observed`) instead of a second pass.
 
+Driver path: at or below ``_DRIVER_EDGES`` distinct edges (10⁶, about
+16 MB of int64 pairs), Spark's fixed cost per job outweighs the work, so
+:func:`connected_components` (union-find), :func:`hits`,
+:func:`bfs_distances` and :func:`shortest_paths` fetch the checkpointed
+edge set once through Arrow (:func:`_driver_arrays`) and compute the
+same result on the driver (numpy int64 kernels; a union-find for
+components).  The edge count is the one
+their edge checkpoint job already observes, and both paths are exact
+integer arithmetic, so their outputs are identical.
+
 Reference scope note: the reference engine (pandas-db) has no graph
 operators — this is beyond-parity capability for the LLM-data-pipeline
 layer, with semantics defined purely by the recursive-closure oracle in
@@ -49,10 +59,16 @@ layer, with semantics defined purely by the recursive-closure oracle in
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, Observation, functions as F
 
 from pandas_db_spark.plans.checkpoint import truncate_lineage
-from pandas_db_spark.session import tiny_df
+
+# Distinct-edge count at or below which the driver path runs.  A fetched
+# edge is two int64 ids on the driver, so the bound keeps the edge
+# arrays at ~16 MB (plus the kernels' node-sized work arrays).
+_DRIVER_EDGES = 1_000_000
 
 
 def _checkpoint_observed(df: DataFrame, *aggs) -> tuple[DataFrame, dict]:
@@ -129,15 +145,58 @@ def _degrees(e: DataFrame) -> DataFrame:
             .groupBy("id").agg(F.count(F.lit(1)).alias("d")))
 
 
+def _dedup_edges(edges: DataFrame, src: str,
+                 dst: str) -> tuple[DataFrame, int]:
+    """The distinct directed edges ``(u, v)`` of the ``src``/``dst``
+    columns cast to long, hash-partitioned on ``u`` and checkpointed,
+    with their count observed on the checkpoint job."""
+    e, m = _checkpoint_observed(
+        _edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
+        .distinct().repartition("u"), _n())
+    return e, m["n"]
+
+
+def _driver_arrays(df: DataFrame) -> list[np.ndarray]:
+    """The columns of ``df`` as numpy arrays, fetched in one Arrow
+    ``toPandas()`` job (a long column comes back int64)."""
+    pdf = df.toPandas()
+    return [pdf[c].to_numpy() for c in df.columns]
+
+
+def _index(u: np.ndarray, v: np.ndarray):
+    """``(ids, fu, fv)``: the sorted distinct endpoints of the edges
+    ``u → v`` and each endpoint's position in ``ids``."""
+    ids, inv = np.unique(np.concatenate([u, v]), return_inverse=True)
+    return ids, inv[:len(u)], inv[len(u):]
+
+
+def _csr(frm: np.ndarray, n: int):
+    """``(order, indptr)``: the edge positions sorted by source index
+    ``frm`` and the start of each of the ``n`` sources' runs in it."""
+    order = np.argsort(frm, kind="stable")
+    return order, np.searchsorted(frm[order], np.arange(n + 1))
+
+
+def _out_edges(order: np.ndarray, indptr: np.ndarray,
+               f: np.ndarray) -> np.ndarray:
+    """The positions of the edges leaving the source indices ``f``."""
+    lo = indptr[f]
+    cnt = indptr[f + 1] - lo
+    start = np.repeat(lo - (np.cumsum(cnt) - cnt), cnt)
+    return order[start + np.arange(cnt.sum())]
+
+
 def _seed_frame(e: DataFrame, seeds: DataFrame, seed_col: str, col: str,
                 name: str) -> DataFrame:
     """``(id, col = 0)`` for the distinct ``seed_col`` ids of ``seeds``
     that are endpoints of the edges ``e``, checkpointed.  Seeds the graph
     has never seen are ignored; raises when none is left."""
+    # the semi-join keeps each (already distinct) node once, so the
+    # seeds need no distinct of their own
     sd, m = _checkpoint_observed(
-        seeds.select(F.col(seed_col).cast("long").alias("id")).distinct()
-             .join(_nodes(e), "id", "left_semi")
-             .select("id", F.lit(0).cast("long").alias(col)), _n())
+        _nodes(e).join(seeds.select(F.col(seed_col).cast("long")
+                                    .alias("id")), "id", "left_semi")
+                 .select("id", F.lit(0).cast("long").alias(col)), _n())
     if m["n"] == 0:
         raise ValueError(f"{name}: no seed id appears in the graph — "
                          f"no {col} would be defined")
@@ -198,11 +257,9 @@ def _small_star(edges: DataFrame) -> DataFrame:
 
 
 def _driver_union_find(edges: DataFrame) -> DataFrame:
-    """Exact union-find on a driver-collected edge list (path compression
-    + union-by-min, near-linear).  Used below ``driver_threshold`` where
-    the edge set is a few MB — dup-candidate graphs usually are, however
-    large the corpus they came from — and the distributed rounds' fixed
-    per-job cost would dominate by 10×."""
+    """Exact union-find on the driver-fetched edge list (path compression
+    + union-by-min, near-linear), for edge sets at or below
+    ``driver_threshold``."""
     parent: dict = {}
 
     def find(x):
@@ -213,12 +270,8 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             parent[x], x = r, parent[x]
         return r
 
-    # collect(), not toLocalIterator(): the caller only enters here at
-    # or below driver_threshold edges (a few MB — an explicitly bounded
-    # driver pull), and toLocalIterator schedules one sequential fetch
-    # job PER PARTITION.
-    for row in edges.collect():
-        u, v = row["u"], row["v"]
+    us, vs = _driver_arrays(edges)
+    for u, v in zip(us.tolist(), vs.tolist()):
         parent.setdefault(u, u)
         parent.setdefault(v, v)
         ru, rv = find(u), find(v)
@@ -228,15 +281,17 @@ def _driver_union_find(edges: DataFrame) -> DataFrame:
             if rv < ru:
                 ru, rv = rv, ru
             parent[rv] = ru
-    spark = edges.sparkSession
     out_schema = edges.select(F.col("u").alias("id"),
                               F.col("v").alias("component")).schema
-    return tiny_df(spark, [(x, find(x)) for x in parent], out_schema)
+    return edges.sparkSession.createDataFrame(
+        pd.DataFrame({"id": list(parent),
+                      "component": [find(x) for x in parent]}),
+        out_schema)
 
 
 def connected_components(pairs: DataFrame, id_a: str = "id_a",
                          id_b: str = "id_b", max_iter: int = 25,
-                         driver_threshold: int = 100_000) -> DataFrame:
+                         driver_threshold: int = _DRIVER_EDGES) -> DataFrame:
     """Label every node appearing in ``pairs`` with its component's
     minimum id.
 
@@ -247,8 +302,8 @@ def connected_components(pairs: DataFrame, id_a: str = "id_a",
 
     Scale-adaptive: the deduplicated edge count is measured first (the
     same job that seeds the convergence signature).  At or below
-    ``driver_threshold`` edges (default 10⁵ ≈ a few MB) an exact driver
-    union-find answers in microseconds — the common case for dup graphs,
+    ``driver_threshold`` edges (default ``_DRIVER_EDGES``) an exact
+    driver union-find answers — the common case for dup graphs,
     which are small even when the corpus is 100 TB.  Above it, the
     alternating-star distributed rounds run; they never co-locate a
     component's members, so billions of edges hold.  ``driver_threshold=0``
@@ -633,14 +688,16 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
     ``unit = 1e6`` graphs to ~4.6e6 nodes fit; pass a smaller unit
     beyond that, the bound scales as 1/unit²).
 
-    Scale shape: identical to :func:`pagerank` — the deduplicated edge
-    set is hash-partitioned and checkpointed once (``truncate_lineage``); each
-    iteration is two keyed joins against it with map-side-combined
-    sums, each checkpointed with its maximum (the normalizer) observed
-    on that same job, so it enters the next plan as a literal; the
-    score vector's lineage truncates every other round.  Nodes with no
-    in-edges (pure hubs) report ``auth_fp = 0``, sinks report
-    ``hub_fp = 0``.
+    Scale shape: the deduplicated edge set is hash-partitioned and
+    checkpointed once, with its size observed on that job.  At or below
+    ``_DRIVER_EDGES`` edges it is fetched to the driver and the
+    recurrence runs there in numpy int64 (:func:`_hits_driver`).  Above
+    it, each iteration is two keyed joins against the edge set with
+    map-side-combined sums, each checkpointed with its maximum (the
+    normalizer) observed on that same job, so it enters the next plan
+    as a literal; the score vector's lineage truncates every other
+    round.  Nodes with no in-edges (pure hubs) report ``auth_fp = 0``,
+    sinks report ``hub_fp = 0``.
 
     The curation use: bipartite host→document or supplier→part graphs
     where "good hubs point at good authorities" separates aggregator
@@ -652,8 +709,9 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                          f"got {iterations}")
     if unit < 1000:
         raise ValueError(f"unit must be >= 1000, got {unit}")
-    e = (_edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
-         .distinct().repartition("u").transform(truncate_lineage))
+    e, n_edges = _dedup_edges(edges, src, dst)
+    if n_edges <= _DRIVER_EDGES:
+        return _hits_driver(e, iterations, unit)
     state, m = _checkpoint_observed(
         _nodes(e).select("id", F.lit(unit).cast("long").alias("h"),
                          F.lit(unit).cast("long").alias("a")), _n())
@@ -662,10 +720,7 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
         return state.select("id",
                             F.lit(0).cast("long").alias("hub_fp"),
                             F.lit(0).cast("long").alias("auth_fp"))
-    if n * unit * unit >= 2 ** 62:
-        raise ValueError(
-            f"n * unit^2 = {n * unit * unit} risks 64-bit overflow; "
-            f"pass unit <= {int((2 ** 62 // n) ** 0.5)} for this graph")
+    _hits_guard(n, unit)
 
     def half(state: DataFrame, frm: str, to: str, x: str,
              y: str) -> DataFrame:
@@ -691,6 +746,40 @@ def hits(edges: DataFrame, src: str = "src", dst: str = "dst",
                         F.col("a").alias("auth_fp"))
 
 
+def _hits_guard(n: int, unit: int) -> None:
+    """Raise when the normalization numerator ``n·unit²`` of an
+    ``n``-node graph could overflow int64."""
+    if n * unit * unit >= 2 ** 62:
+        raise ValueError(
+            f"n * unit^2 = {n * unit * unit} risks 64-bit overflow; "
+            f"pass unit <= {int((2 ** 62 // n) ** 0.5)} for this graph")
+
+
+def _hits_driver(e: DataFrame, iterations: int, unit: int) -> DataFrame:
+    """:func:`hits` on the driver over the fetched edges ``(u, v)``.
+    Sums are int64 scatter-adds (``np.add.at``), never a float64
+    ``bincount``: the normalization numerators pass 2⁵³."""
+    u, v = _driver_arrays(e)
+    ids, fu, fv = _index(u, v)
+    n = len(ids)
+    if n:
+        _hits_guard(n, unit)
+    h = np.full(n, unit, np.int64)
+    a = h.copy()
+
+    def half(x, frm, to):
+        raw = np.zeros(n, np.int64)
+        np.add.at(raw, to, x[frm])
+        return (raw * unit) // max(int(raw.max(initial=0)), 1)
+
+    for _ in range(iterations):
+        a = half(h, fu, fv)
+        h = half(a, fv, fu)
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids, "hub_fp": h, "auth_fp": a}),
+        "id long, hub_fp long, auth_fp long")
+
+
 # =====================================================================
 # Multi-source BFS (hop distances from a seed set)
 # =====================================================================
@@ -711,14 +800,16 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
     "how far".
 
     Algorithm: frontier BFS.  The edge set is deduplicated,
-    hash-partitioned on ``src`` and checkpointed ONCE
-    (``truncate_lineage``); each hop is one join of the CURRENT FRONTIER
-    (never the visited set) against the stationary edge table, an
-    anti-join against the visited set, and a distinct — per-hop shuffle
-    volume is O(frontier-adjacent edges), and the loop exits as soon as
-    a frontier comes back empty, so bounded-diameter graphs never pay
-    for ``max_hops``.  Lineage is truncated per hop exactly as
-    :func:`connected_components` does.
+    hash-partitioned on ``src`` and checkpointed once, with its size
+    observed on that job.  At or below ``_DRIVER_EDGES`` edges the
+    edges and seeds are fetched to the driver and the hops run there
+    over a numpy CSR adjacency (:func:`_bfs_driver`).  Above it, each
+    hop is one join of the CURRENT FRONTIER (never the visited set)
+    against the stationary edge table, an anti-join against the
+    visited set, and a distinct — per-hop shuffle volume is
+    O(frontier-adjacent edges).  On both paths the loop exits as soon
+    as a frontier comes back empty, so bounded-diameter graphs never
+    pay for ``max_hops``.
 
     Unlike the alternating-star CC (round count O(log² n)), BFS rounds
     ARE the graph diameter — that is inherent to computing distances,
@@ -733,9 +824,10 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    e = (_edges(edges, F.col(src).cast("long"), F.col(dst).cast("long"))
-         .distinct().repartition("u").transform(truncate_lineage))
+    e, n_edges = _dedup_edges(edges, src, dst)
     visited = _seed_frame(e, seeds, seed_col, "dist", "bfs_distances")
+    if n_edges <= _DRIVER_EDGES:
+        return _bfs_driver(e, visited, max_hops)
     frontier = visited.select("id")
     for hop in range(1, max_hops + 1):
         nxt, m = _checkpoint_observed(
@@ -748,6 +840,57 @@ def bfs_distances(edges: DataFrame, seeds: DataFrame, src: str = "src",
             nxt.select("id", F.lit(hop).cast("long").alias("dist"))))
         frontier = nxt
     return visited
+
+
+def _bfs_driver(e: DataFrame, seeds: DataFrame, max_hops: int) -> DataFrame:
+    """:func:`bfs_distances` on the driver over the fetched edges
+    ``(u, v)`` and the checkpointed seed frame ``seeds``."""
+    u, v = _driver_arrays(e)
+    ids, fu, fv = _index(u, v)
+    order, indptr = _csr(fu, len(ids))
+    dist = np.full(len(ids), -1, np.int64)
+    f = np.searchsorted(ids, _driver_arrays(seeds.select("id"))[0])
+    dist[f] = 0
+    for hop in range(1, max_hops + 1):
+        nxt = np.unique(fv[_out_edges(order, indptr, f)])
+        f = nxt[dist[nxt] < 0]
+        if not len(f):
+            break
+        dist[f] = hop
+    hit = dist >= 0
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids[hit], "dist": dist[hit]}),
+        "id long, dist long")
+
+
+def _sssp_driver(e: DataFrame, seeds: DataFrame,
+                 max_hops: int) -> DataFrame:
+    """:func:`shortest_paths` on the driver over the fetched edges
+    ``(u, v, w)`` and the checkpointed seed frame ``seeds``: the same
+    frontier rounds, relaxing only the edges that leave the nodes
+    improved last round."""
+    u, v, w = _driver_arrays(e)
+    ids, fu, fv = _index(u, v)
+    n = len(ids)
+    order, indptr = _csr(fu, n)
+    cost = np.zeros(n, np.int64)
+    reached = np.zeros(n, bool)
+    f = np.searchsorted(ids, _driver_arrays(seeds.select("id"))[0])
+    reached[f] = True
+    for _ in range(max_hops):
+        pos = _out_edges(order, indptr, f)
+        to = fv[pos]
+        best = np.full(n, np.iinfo(np.int64).max)
+        np.minimum.at(best, to, cost[fu[pos]] + w[pos])
+        cand = np.unique(to)
+        f = cand[~reached[cand] | (best[cand] < cost[cand])]
+        if not len(f):
+            break
+        cost[f] = best[f]
+        reached[f] = True
+    return e.sparkSession.createDataFrame(
+        pd.DataFrame({"id": ids[reached], "cost": cost[reached]}),
+        "id long, cost long")
 
 
 def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
@@ -771,14 +914,17 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
     last round (provably equal to full per-round relaxation: a path
     improves its prefix nodes in hop order, so every useful relaxation
     source is in some round's frontier).  Parallel (u, v) edges
-    collapse to their minimum weight up front.  Per round: one join of
-    the frontier against the stationary edge table, one
-    map-side-combined ``groupBy(dst).min``, one anti/semi split
-    against the running distance vector; early exit when a round
-    improves nothing.  Round count is ``max_hops`` by definition — the
-    bound IS the semantics (see :func:`bfs_distances` on why
-    distance-style operators take an explicit bound instead of
-    iterating to a diameter-dependent fixpoint).
+    collapse to their minimum weight up front, in the job that
+    checkpoints the edge set and observes its size.  At or below
+    ``_DRIVER_EDGES`` edges the rounds run on the driver in numpy
+    (:func:`_sssp_driver`).  Above it, each round is one join of the
+    frontier against the stationary edge table, one map-side-combined
+    ``groupBy(dst).min``, one anti/semi split against the running
+    distance vector.  Both paths exit early when a round improves
+    nothing.  Round count is ``max_hops`` by definition — the bound IS
+    the semantics (see :func:`bfs_distances` on why distance-style
+    operators take an explicit bound instead of iterating to a
+    diameter-dependent fixpoint).
     """
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
@@ -788,7 +934,7 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
         .where(F.col("w").isNotNull())
         .groupBy("u", "v").agg(F.min("w").alias("w"))
         .repartition("u"),
-        F.min("w").alias("lo"), F.max("w").alias("hi"))
+        _n(), F.min("w").alias("lo"), F.max("w").alias("hi"))
     w_min, w_max = wstats["lo"] or 0, wstats["hi"] or 0
     if w_min < 0:
         raise ValueError(
@@ -798,6 +944,8 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
             f"max_hops * max_weight = {max_hops * w_max} risks 64-bit "
             "overflow; lower max_hops or rescale weights")
     dist = _seed_frame(e, seeds, seed_col, "cost", "shortest_paths")
+    if wstats["n"] <= _DRIVER_EDGES:
+        return _sssp_driver(e, dist, max_hops)
     frontier = dist
     for _ in range(max_hops):
         cand = (e.join(frontier.select(F.col("id").alias("u"),
@@ -827,7 +975,7 @@ def shortest_paths(edges: DataFrame, seeds: DataFrame, src: str = "src",
 def append_components(labels: DataFrame, new_pairs: DataFrame,
                       id_a: str = "id_a", id_b: str = "id_b",
                       max_iter: int = 25,
-                      driver_threshold: int = 100_000) -> DataFrame:
+                      driver_threshold: int = _DRIVER_EDGES) -> DataFrame:
     """Fold a batch of new duplicate pairs into an existing component
     labeling WITHOUT re-running connected components over the corpus.
 
@@ -873,7 +1021,7 @@ def append_components(labels: DataFrame, new_pairs: DataFrame,
                 .select(F.col("la").alias("id_a"),
                         F.col("lb").alias("id_b")))
     # no truncation here: connected_components' output is already
-    # materialized (driver union-find tiny_df, or cached star-round
+    # materialized (driver union-find frame, or cached star-round
     # legs), so this filter+rename is a free view — a checkpoint would
     # only re-copy batch-bounded rows.  The two broadcast
     # consumers below build from the same subtree (ReusedExchange).

@@ -9,6 +9,23 @@ from pandas_db_spark.operators import graph as G
 from pandas_db_spark.operators import dedup as D
 
 
+def _both_paths(monkeypatch, fn):
+    """``[fn() on the driver path, fn() on the distributed path]`` for
+    the operators that switch at ``graph._DRIVER_EDGES``."""
+    out = [fn()]
+    with monkeypatch.context() as m:
+        m.setattr(G, "_DRIVER_EDGES", 0)
+        out.append(fn())
+    return out
+
+
+def _error(fn) -> str:
+    """The message of the ValueError ``fn()`` raises."""
+    with pytest.raises(ValueError) as err:
+        fn()
+    return str(err.value)
+
+
 def _cc(spark, edges, **kw):
     pairs = spark.createDataFrame(edges, "id_a long, id_b long")
     rows = G.connected_components(pairs, **kw).collect()
@@ -622,7 +639,7 @@ def test_clustering_coefficients_hand_computed(spark):
 
 
 # ---------------------------------------------------------------------
-# bfs_distances (multi-source hop distances) — r12 part 4
+# bfs_distances (multi-source hop distances)
 # ---------------------------------------------------------------------
 
 def _bfs_py(edges, seeds, max_hops):
@@ -650,7 +667,7 @@ def _bfs_py(edges, seeds, max_hops):
     return dist
 
 
-def test_bfs_matches_python_replay_on_random_graph(spark):
+def test_bfs_matches_python_replay_on_random_graph(spark, monkeypatch):
     import random
 
     rng = random.Random(7)
@@ -658,9 +675,15 @@ def test_bfs_matches_python_replay_on_random_graph(spark):
     seeds = [0, 17, 99]  # 99 not in the graph -> ignored
     e = spark.createDataFrame(edges, "src long, dst long")
     s = spark.createDataFrame([(x,) for x in seeds], "id long")
-    got = {r["id"]: r["dist"]
-           for r in G.bfs_distances(e, s, max_hops=5).collect()}
-    assert got == _bfs_py(edges, seeds, 5)
+
+    def run():
+        out = G.bfs_distances(e, s, max_hops=5)
+        return (out.schema.simpleString(),
+                {r["id"]: r["dist"] for r in out.collect()})
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    assert driver[1] == _bfs_py(edges, seeds, 5)
 
 
 def test_bfs_directed_chain_and_hop_cap(spark):
@@ -693,18 +716,30 @@ def test_bfs_min_distance_wins_across_seeds(spark):
     assert got == {1: 0, 10: 0, 2: 1, 3: 1}
 
 
-def test_bfs_validation(spark):
+def test_bfs_validation(spark, monkeypatch):
     e = spark.createDataFrame([(1, 2)], "src long, dst long")
+    empty = spark.createDataFrame([], "src long, dst long")
     s_out = spark.createDataFrame([(9,)], "id long")
-    with pytest.raises(ValueError, match="no seed id appears"):
-        G.bfs_distances(e, s_out, max_hops=3)
+    s_null = spark.createDataFrame([(None,)], "id long")
     s = spark.createDataFrame([(1,)], "id long")
+    s_with_null = spark.createDataFrame([(None,), (1,)], "id long")
     with pytest.raises(ValueError, match="max_hops"):
         G.bfs_distances(e, s, max_hops=-1)
-    # max_hops=0: seeds only
-    assert ({r["id"]: r["dist"]
-             for r in G.bfs_distances(e, s, max_hops=0).collect()}
-            == {1: 0})
+
+    def run():
+        return (
+            [_error(lambda: G.bfs_distances(g, sd, max_hops=3))
+             for g, sd in ((e, s_out), (e, s_null), (empty, s))],
+            # max_hops=0: seeds only; a NULL seed id is dropped
+            {r["id"]: r["dist"]
+             for r in G.bfs_distances(e, s, max_hops=0).collect()},
+            {r["id"]: r["dist"] for r in
+             G.bfs_distances(e, s_with_null, max_hops=3).collect()})
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    assert all("no seed id appears" in msg for msg in driver[0])
+    assert driver[1:] == ({1: 0}, {1: 0, 2: 1})
 
 
 # ---------------------------------------------------------------------
@@ -780,7 +815,7 @@ def test_common_neighbors_hub_cap_warns_and_undercounts(spark):
 
 
 # ---------------------------------------------------------------------
-# hits (hubs & authorities) — r12 part 4
+# hits (hubs & authorities)
 # ---------------------------------------------------------------------
 
 def _hits_py(edges, k, unit):
@@ -802,15 +837,28 @@ def _hits_py(edges, k, unit):
     return {x: (h[x], a[x]) for x in nodes}
 
 
-def test_hits_matches_python_replay(spark):
+def test_hits_matches_python_replay(spark, monkeypatch):
     import random
 
     rng = random.Random(99)
     edges = [(rng.randrange(30), rng.randrange(30)) for _ in range(150)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {r["id"]: (r["hub_fp"], r["auth_fp"])
-           for r in G.hits(df, iterations=3, unit=10 ** 6).collect()}
-    assert got == _hits_py(edges, 3, 10 ** 6)
+    # authority 1000 with 120 in-edges: at unit=1e7 its normalization
+    # numerator a_raw·unit reaches 1.2e16 > 2^53, past float64's exact
+    # integers, while n·unit² stays under the overflow guard
+    star = edges + [(100 + i, 1000) for i in range(120)]
+    cases = [(edges, 3, 10 ** 6), (star, 3, 10 ** 7)]
+
+    def run():
+        outs = [G.hits(spark.createDataFrame(es, "src long, dst long"),
+                       iterations=k, unit=unit) for es, k, unit in cases]
+        return [(out.schema.simpleString(),
+                 {r["id"]: (r["hub_fp"], r["auth_fp"])
+                  for r in out.collect()}) for out in outs]
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    for (es, k, unit), (_, got) in zip(cases, driver):
+        assert got == _hits_py(es, k, unit)
 
 
 def test_hits_bipartite_structure(spark):
@@ -829,21 +877,26 @@ def test_hits_bipartite_structure(spark):
     assert 0 < got[11][1] < unit and got[11][1] == got[12][1]
 
 
-def test_hits_validation_and_empty(spark):
+def test_hits_validation_and_empty(spark, monkeypatch):
     df = spark.createDataFrame([(1, 2)], "src long, dst long")
     with pytest.raises(ValueError, match="iterations"):
         G.hits(df, iterations=-1)
     with pytest.raises(ValueError, match="unit must be"):
         G.hits(df, unit=10)
-    big = spark.createDataFrame([(1, 2)], "src long, dst long")
-    with pytest.raises(ValueError, match="overflow"):
-        G.hits(big, unit=2 ** 31)
     empty = spark.createDataFrame([], "src long, dst long")
-    assert G.hits(empty, iterations=2).count() == 0
-    # iterations=0: everything at unit
-    assert ({r["id"]: (r["hub_fp"], r["auth_fp"])
-             for r in G.hits(df, iterations=0).collect()}
-            == {1: (10 ** 6, 10 ** 6), 2: (10 ** 6, 10 ** 6)})
+
+    def run():
+        out = G.hits(empty, iterations=2)
+        return (_error(lambda: G.hits(df, unit=2 ** 31)),
+                out.schema.simpleString(), out.count(),
+                # iterations=0: everything at unit
+                {r["id"]: (r["hub_fp"], r["auth_fp"])
+                 for r in G.hits(df, iterations=0).collect()})
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    assert "overflow" in driver[0] and driver[2] == 0
+    assert driver[3] == {1: (10 ** 6, 10 ** 6), 2: (10 ** 6, 10 ** 6)}
 
 
 # ---------------------------------------------------------------------
@@ -1031,7 +1084,7 @@ def test_lpa_validation(spark):
 
 
 # ---------------------------------------------------------------------
-# shortest_paths (hop-bounded weighted Bellman-Ford) — r12 part 4
+# shortest_paths (hop-bounded weighted Bellman-Ford)
 # ---------------------------------------------------------------------
 
 def _sssp_py(edges, seeds, max_hops):
@@ -1050,7 +1103,7 @@ def _sssp_py(edges, seeds, max_hops):
     return dist
 
 
-def test_sssp_matches_python_replay(spark):
+def test_sssp_matches_python_replay(spark, monkeypatch):
     import random
 
     rng = random.Random(77)
@@ -1058,10 +1111,18 @@ def test_sssp_matches_python_replay(spark):
              for _ in range(90)]
     df = spark.createDataFrame(edges, "src long, dst long, w long")
     s = spark.createDataFrame([(0,), (7,)], "id long")
-    for hops in (0, 1, 4):
-        got = {r["id"]: r["cost"]
-               for r in G.shortest_paths(df, s, max_hops=hops).collect()}
-        assert got == _sssp_py(edges, [0, 7], hops)
+    hops = (0, 1, 4)
+
+    def run():
+        outs = [G.shortest_paths(df, s, max_hops=h) for h in hops]
+        return [(out.schema.simpleString(),
+                 {r["id"]: r["cost"] for r in out.collect()})
+                for out in outs]
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    for h, (_, got) in zip(hops, driver):
+        assert got == _sssp_py(edges, [0, 7], h)
 
 
 def test_sssp_cheap_long_path_beats_expensive_short_one(spark):
@@ -1085,21 +1146,29 @@ def test_sssp_cheap_long_path_beats_expensive_short_one(spark):
             == {1: 0, 2: 3})
 
 
-def test_sssp_validation(spark):
+def test_sssp_validation(spark, monkeypatch):
     df = spark.createDataFrame([(1, 2, -1)], "src long, dst long, w long")
     s = spark.createDataFrame([(1,)], "id long")
     with pytest.raises(ValueError, match="weights must be >= 0"):
         G.shortest_paths(df, s, max_hops=2)
     ok = spark.createDataFrame([(1, 2, 1)], "src long, dst long, w long")
+    empty = spark.createDataFrame([], "src long, dst long, w long")
     out = spark.createDataFrame([(9,)], "id long")
-    with pytest.raises(ValueError, match="no seed id"):
-        G.shortest_paths(ok, out, max_hops=2)
+    s_null = spark.createDataFrame([(None,)], "id long")
     with pytest.raises(ValueError, match="max_hops"):
         G.shortest_paths(ok, s, max_hops=-1)
 
+    def run():
+        return [_error(lambda: G.shortest_paths(g, sd, max_hops=2))
+                for g, sd in ((ok, out), (ok, s_null), (empty, s))]
+
+    driver, distributed = _both_paths(monkeypatch, run)
+    assert driver == distributed
+    assert all("no seed id" in msg for msg in driver)
+
 
 # ---------------------------------------------------------------------------
-# Reliable-checkpoint path (VERDICT r12 #1): with a checkpoint dir set, every
+# Reliable-checkpoint path: with a checkpoint dir set, every
 # iterative operator must truncate through DataFrame.checkpoint (DFS-backed,
 # survives executor loss) and produce bit-identical results to the
 # localCheckpoint default.
@@ -1117,9 +1186,13 @@ def _signature(edges):
     return int(row["n"]), int(row["h"])
 
 
-def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path):
+def test_reliable_checkpoint_reachable_and_bit_identical(spark, tmp_path,
+                                                        monkeypatch):
     from pathlib import Path
 
+    # hits, bfs_distances and shortest_paths checkpoint every round only
+    # on the distributed path
+    monkeypatch.setattr(G, "_DRIVER_EDGES", 0)
     sc = spark.sparkContext
     assert sc.getCheckpointDir() is None  # the local[32] default
 
